@@ -245,7 +245,7 @@ def _latency_leg(
     q.stop()
     # bridge BEFORE broker (mirrors _cell/_full_path_leg): otherwise the
     # member client + watchdog keep reconnect-looping with backoff for
-    # the rest of the bench process and the SpoolPublisher never closes
+    # the rest of the bench process and the flusher never exits
     bridge.stop()
     broker.stop()
     # The first data-carrying micro-batches pay one-time streaming-plan

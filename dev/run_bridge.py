@@ -9,8 +9,8 @@ and point one Spark streaming query at the union of the spool dirs.
 Usage: python dev/run_bridge.py <host> <port> <topic_filter> <group> \
            <clientid> <spool_dir> [qos] [members]
 
-Runs until SIGTERM/SIGINT; acks follow the durable spool append (the
-at-least-once broker→spool contract; Spark's offset WAL upgrades the
+Runs until SIGTERM/SIGINT; acks follow the fsynced seal of each
+message's spool segment (the at-least-once broker→spool contract; Spark's offset WAL upgrades the
 spool→query leg to exactly-once).
 """
 

@@ -1056,7 +1056,6 @@ def simhash_hamming_pairs(
     max_hamming: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fps: DataFrame | None = None,
 ) -> DataFrame:
     """SimHash near-dup PAIRS at Hamming distance ≤ ``max_hamming`` (≤ 3
     with the default 4-band geometry) — X86, the relation form of the
@@ -1089,14 +1088,8 @@ def simhash_hamming_pairs(
     Arithmetic-shift + mask band extraction and two's-complement popcount
     are engine-identical, so the DuckDB oracle replays the relation
     exactly (plans/dedup.py:dedup_simhash_hamming).
-
-    ``fps``, when given, is an already-materialized ``(id_col, simhash)``
-    table (the plans layer's session-scoped fingerprint artifact) — the
-    UDF corpus scan is skipped entirely and this operator only pays the
-    banding/verify stages.
     """
-    if fps is None:
-        fps = simhash_fingerprints(docs, text_col, id_col).localCheckpoint()
+    fps = simhash_fingerprints(docs, text_col, id_col).localCheckpoint()
     reps = fps.groupBy("simhash").agg(F.min(id_col).alias("rep"))
     band_structs = F.array(
         *[

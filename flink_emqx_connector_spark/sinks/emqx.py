@@ -39,11 +39,7 @@ def _publish_partition(rows, transport: str, spool_dir: str, host: str, port: in
             for r in rows:
                 pub.publish(r["topic"], bytes(r["payload"]), qos=qos)
         finally:
-            # Seal the segment: un-closed .openseg files are never rolled,
-            # so ack GC can't collect them and every latest_seq()/read
-            # poll rescans them forever (unbounded on a long-running
-            # stream publishing one per partition per micro-batch).
-            pub.close()
+            pub.close()  # seal: nothing is visible to readers before this
     else:
         from ..sources.transport import _load_mqtt
 

@@ -14,25 +14,32 @@ never hits this because a Flink subtask IS a stable long-lived process
 (``EMQXSourceReader.java:34-66``).
 
 So the bridge runs N shared-subscription clients as threads in the
-DRIVER (which lives exactly as long as the streaming query); they append
-every message to the segment-log spool and ack the broker only after the
-durable append — the same ack-after-durable contract as
-checkpoint-gated acks, moved one hop earlier. Downstream, executors read
-the spool, which is a seekable replayable log, so Structured Streaming's
-offset WAL upgrades delivery to exactly-once from the spool onward; the
-broker→spool hop stays at-least-once (bridge crash before ack →
-redelivery → duplicate spool rows, deduplicable by key downstream).
-Messages are appended inside the network callback, so there is no
-in-process queue: in-flight deliveries are bounded by the broker's
-per-session window (EMQX ``max_inflight``) and by TCP backpressure — a
-slow append stops the socket reads instead of growing memory.
+DRIVER (which lives exactly as long as the streaming query). Their
+network callbacks only queue each message. One flusher thread seals
+whatever is queued as one spool segment (``SpoolPublisher.flush``: fsync,
+rename, directory fsync) as soon as its previous seal returns — group
+commit, with no delay or size setting — and only then acks the group's
+messages to the broker: the same ack-after-durable contract as
+checkpoint-gated acks, moved one hop earlier. A message whose member died
+before its seal returned is not acked; the broker redelivers it. If a
+seal raises, nothing of that group is acked, the flusher stops, and the
+source's ``latestOffset`` raises the error (``error``). Downstream,
+executors read the spool, which is a seekable replayable log, so
+Structured Streaming's offset WAL upgrades delivery to exactly-once from
+the spool onward; the broker→spool hop stays at-least-once (bridge crash
+before ack → redelivery → duplicate spool rows, deduplicable by key
+downstream). Queued messages are bounded by the broker's per-session
+in-flight window (EMQX ``max_inflight``): nothing more arrives until
+acks go out, and acks wait for the seal.
 
 Scale posture: the bridge is ingestion I/O only (no decode, no compute) —
-one thread per shared-subscription member, fan-in bounded by broker
-delivery. Heavy lifting stays in executors reading the spool in parallel
-(whole-segment claims, ~1/N of the log each). For multi-driver scale-out,
-run one bridge per topic-filter on any stable host; the spool directory
-is the handoff point.
+one thread per shared-subscription member plus the flusher, fan-in
+bounded by broker delivery. Heavy lifting stays in executors reading the
+spool in parallel (whole-segment claims, ~1/N of the segments each; a
+segment holds one group, so a burst spreads over many segments and a
+trickle makes small ones). For multi-driver scale-out, run one bridge
+per topic-filter on any stable host; the spool directory is the handoff
+point, and any number of bridges can seal into one.
 """
 
 from __future__ import annotations
@@ -45,7 +52,7 @@ from .transport import SpoolPublisher, _load_mqtt
 
 class MqttSpoolBridge:
     """N manual-ack shared-subscription clients draining a broker into a
-    spool directory; acks follow the durable append."""
+    spool directory; acks follow the seal of each message's segment."""
 
     #: Watchdog poll period (seconds). A respawn is driven by broker
     #: session resume, so a couple of seconds of detection latency only
@@ -68,8 +75,12 @@ class MqttSpoolBridge:
         auth_secret: "str | bytes | None" = None,
     ):
         self.spool_dir = spool_dir
-        self._lock = threading.Lock()
         self._pub = SpoolPublisher(spool_dir)
+        #: (client, message) pairs the callbacks queued for the flusher.
+        self._queue: list = []
+        self._queued = threading.Condition()
+        #: The exception a seal raised; the flusher has stopped.
+        self.error: Exception | None = None
         self._host, self._port, self._qos = host, port, qos
         self._clientid = clientid
         #: How long the broker keeps each member's subscription and
@@ -94,6 +105,8 @@ class MqttSpoolBridge:
         )
         self._stopped = threading.Event()
         self.respawns = 0
+        self._flusher = threading.Thread(target=self._flush_loop, daemon=True)
+        self._flusher.start()
         self._clients = [self._spawn_member(i) for i in range(members)]
         # Member supervision — the dynamic-rebalancing leg BOTH the
         # reference and the pre-round-8 engine lacked (the reference's
@@ -141,20 +154,11 @@ class MqttSpoolBridge:
                 client.subscribe(self._sub_topic, qos=self._qos)
 
         def on_message(client, userdata, msg):
-            # ordered (key, value) pairs — duplicate keys preserved
-            # end-to-end (EMQXMessage.java:9 Mqtt5UserProperties parity)
-            props_p = []
-            if getattr(msg, "properties", None) is not None:
-                props_p = list(getattr(msg.properties, "UserProperty", []) or [])
-            # durable append THEN ack: a crash between the two yields
-            # broker redelivery (duplicate spool row), never loss
-            with self._lock:
+            with self._queued:
                 if self._stopped.is_set():
                     return  # spool closed; leave un-acked → redelivery
-                self._pub.publish(
-                    msg.topic, bytes(msg.payload), qos=msg.qos, properties=props_p
-                )
-            client.ack(msg.mid, msg.qos)
+                self._queue.append((client, msg))
+                self._queued.notify()
 
         def on_disconnect(client, userdata, flags, reason, properties=None):
             # real-paho leg: mark takeover so the watchdog cedes (the
@@ -201,6 +205,37 @@ class MqttSpoolBridge:
         cli.loop_start()
         return cli
 
+    def _flush_loop(self) -> None:
+        """Seal whatever is queued, then ack it; until ``stop`` has set
+        the stop flag and the queue is drained, or a seal raises."""
+        while True:
+            with self._queued:
+                while not self._queue and not self._stopped.is_set():
+                    self._queued.wait()
+                group, self._queue = self._queue, []
+            if not group:
+                return
+            try:
+                for _cli, msg in group:
+                    # ordered (key, value) pairs — duplicate keys preserved
+                    # end-to-end (EMQXMessage.java:9 Mqtt5UserProperties)
+                    props = getattr(msg, "properties", None)
+                    self._pub.publish(
+                        msg.topic, bytes(msg.payload), qos=msg.qos,
+                        properties=list(getattr(props, "UserProperty", []) or []),
+                    )
+                self._pub.flush()
+            except Exception as e:  # nothing of the group is acked
+                self.error = e
+                return
+            for cli, msg in group:
+                if self._member_dead(cli):
+                    continue  # the broker redelivers it to the respawn
+                try:
+                    cli.ack(msg.mid, msg.qos)
+                except OSError:
+                    pass  # connection gone: the broker redelivers it
+
     def refused(self) -> list[int]:
         """The CONNACK codes when EVERY member was permanently refused
         (bad clientid, credentials or auth method; the members cede and
@@ -243,7 +278,7 @@ class MqttSpoolBridge:
         UNSUBSCRIBEs its ``$share`` filter (no new work; the broker
         immediately re-dispatches its never-delivered queue), gets a
         ``drain_s`` window in which deliveries already in flight keep
-        flowing through the normal append-then-ack path, then
+        flowing through the normal seal-then-ack path, then
         disconnects — whatever it never acked re-dispatches to the
         surviving members (EMQX behavior, pinned by
         ``test_shared_group_graceful_scale_in_no_loss``). No message is
@@ -286,7 +321,7 @@ class MqttSpoolBridge:
                 cli.unsubscribe(self._sub_topic)
             except Exception:
                 pass  # already dead → broker detach re-dispatch covers it
-        _time.sleep(drain_s)  # in-flight deliveries append+ack normally
+        _time.sleep(drain_s)  # in-flight deliveries seal+ack normally
         for cli in departing:
             self._announce_offline(cli)
             try:
@@ -316,7 +351,12 @@ class MqttSpoolBridge:
                 pass  # dead socket: the retained WILL tells the truth
 
     def stop(self) -> None:
-        self._stopped.set()
+        """Seal and ack everything queued, then disconnect every member;
+        a message that arrives after this starts stays un-acked."""
+        with self._queued:
+            self._stopped.set()
+            self._queued.notify()
+        self._flusher.join()
         self._watchdog.join(timeout=2 * self.WATCHDOG_INTERVAL + 1)
         for cli in self._clients:
             self._announce_offline(cli)
@@ -324,5 +364,3 @@ class MqttSpoolBridge:
                 cli.disconnect()
             except Exception:
                 pass
-        with self._lock:
-            self._pub.close()

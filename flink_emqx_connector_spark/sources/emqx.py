@@ -11,12 +11,12 @@ Mapping onto the reference:
   members, clientid = ``{base}-bridge-{i}`` (``bridge_members`` option);
   ``partitions()`` splits each micro-batch's spool window N ways.
 - ``EMQXSourceReader`` (``EMQXSourceReader.java:34-203``) → the bridge
-  (client, ack after durable append) plus a per-partition ``read()`` of
-  the spool; the spool's acked frontier advances in ``commit(offset)`` —
-  Spark calls it after the micro-batch's offset is durably logged, the
-  same point in the protocol as Flink's ``notifyCheckpointComplete`` (ST3).
+  (client, ack after the message's segment is sealed) plus a
+  per-partition ``read()`` of the spool; the spool's acked frontier
+  advances in ``commit(offset)`` — Spark calls it after the micro-batch's
+  offset is durably logged, the same point in the protocol as Flink's ``notifyCheckpointComplete`` (ST3).
 - Delivery: broker → spool is at-least-once (a bridge crash between
-  append and ack redelivers, as the reference does after a crash, test
+  seal and ack redelivers, as the reference does after a crash, test
   ``EMQXSourceIntegrationTest.java:295-298``); spool → Spark is
   exactly-once through the offset WAL. Pair with ``dropDuplicates`` on a
   message key for effective exactly-once end to end.
@@ -32,7 +32,7 @@ Usage::
 Transports:
 
 - ``bridge`` (default) — the MQTT path: driver-side shared-subscription
-  clients drain the broker into a spool (ack after durable append),
+  clients drain the broker into a spool (ack after a durable seal),
   executors read the spool. MQTT 5 acks are connection-scoped, so the
   clients live in the one process that outlives every micro-batch; see
   ``sources/bridge.py``.
@@ -139,6 +139,8 @@ class EMQXStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         bridge = _BRIDGES.get(self._bridge_key)
         if bridge is not None:
+            if bridge.error is not None:
+                raise bridge.error  # a seal failed; nothing of it was acked
             refused = bridge.refused()
             if refused:
                 raise RuntimeError(

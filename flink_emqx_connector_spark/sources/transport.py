@@ -1,16 +1,29 @@
 """The segment-log spool: the durable handoff between MQTT ingest and the
 EMQX source.
 
-- ``SpoolPublisher`` appends NDJSON lines to an open segment and rolls it
-  every ``segment_size`` messages. The driver-side bridge
-  (``sources/bridge.py``) is its MQTT-facing writer; the sink's
-  ``transport=spool`` leg is another.
+A spool is a directory of sealed segments, ``{first:012d}-{last:012d}.seg``
+with one NDJSON line per message, plus a ``FRONTIER`` file. A segment
+appears once, complete, under its final name, and never changes after.
+
+- ``SpoolPublisher`` buffers messages and seals the buffer as one segment
+  on ``flush()``. The driver-side bridge (``sources/bridge.py``) is its
+  MQTT-facing writer; the sink's ``transport=spool`` leg is another.
 - ``SpoolTransport`` is the consumer view the source reads: a partition
-  claims whole segments, *ack* advances a ``FRONTIER`` file (the broker's
-  session state) and garbage-collects fully-acked closed segments.
+  claims whole segments by file name, *ack* advances the ``FRONTIER`` file
+  (the broker's session state) and garbage-collects fully-acked segments.
   Un-acked messages survive restarts and are redelivered — the reference's
   at-least-once contract (``EMQXSourceReader.java:168-202``) on a seekable
   log, which the micro-batch offset WAL upgrades to exactly-once.
+  A segment holds one seal: a bridge under a trickle seals a few messages
+  each, a burst or a sink task up to ``SEGMENT_SIZE``, so a batch of many
+  segments spreads over all partitions.
+
+Seals and acks hold an ``flock`` on the spool directory. A seal takes the
+next seq range, writes and fsyncs ``{segment}.tmp``, renames it to its
+final name and fsyncs the directory, all under the lock. So segments
+become visible in seq order and no reader commits past a seq that a slower
+writer makes visible later; a seq is never reused, also after a crash
+(``FRONTIER`` is made durable before the segments below it are unlinked).
 
 Records are ``{seq, topic, qos, retained, properties, payload_hex,
 timestamp}``; ``_load_mqtt`` picks the MQTT client the bridge and the sink
@@ -19,9 +32,13 @@ speak through.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import glob
 import json
 import os
 import time
+import zlib
 
 
 def _prop_pairs(raw) -> list[tuple[str, str]]:
@@ -40,123 +57,86 @@ def _prop_pairs(raw) -> list[tuple[str, str]]:
 # --------------------------------------------------------------------------
 
 
-#: Messages per closed segment file. Small enough that the tail (open)
-#: segment re-read per trigger is cheap, large enough that 50k messages
-#: are ~100 files, not 50k.
+#: Most messages a publisher buffers before it seals them: bounds its
+#: memory and the size of one partition's claim; 50k messages are ~100
+#: files at least, not 50k.
 SEGMENT_SIZE = 512
 
-#: An .openseg below the frontier must ALSO have been quiet this long
-#: before ack GC may unlink it (a live publisher could still append).
-OPENSEG_GC_QUIET_S = 300.0
+
+@contextlib.contextmanager
+def _locked_dir(spool_dir: str):
+    """Hold an exclusive ``flock`` on the spool directory; yields the
+    directory's fd so the holder can fsync it after a rename."""
+    os.makedirs(spool_dir, exist_ok=True)
+    fd = os.open(spool_dir, os.O_RDONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield fd
+    finally:
+        os.close(fd)  # releases the lock
 
 
-def _scan_segments(spool_dir: str):
-    """(closed, open_) segment listings.
+def _write_synced(path: str, text: str) -> None:
+    with open(path, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
 
-    closed: list of (first_seq, last_seq, path); open_: list of paths.
-    """
-    closed, open_ = [], []
-    if not os.path.isdir(spool_dir):
-        return closed, open_
-    for f in os.listdir(spool_dir):
-        path = os.path.join(spool_dir, f)
+
+def _scan_segments(spool_dir: str) -> list[tuple[int, int, str]]:
+    """(first_seq, last_seq, path) of every segment, in seq order."""
+    try:
+        names = os.listdir(spool_dir)
+    except FileNotFoundError:
+        return []
+    segs = []
+    for f in names:
         if f.endswith(".seg"):
-            first, last = f.split("-", 2)[:2]
-            closed.append((int(first), int(last), path))
-        elif f.endswith(".openseg"):
-            open_.append(path)
-    closed.sort()
-    return closed, open_
+            first, last = f[: -len(".seg")].split("-")
+            segs.append((int(first), int(last), os.path.join(spool_dir, f)))
+    segs.sort()
+    return segs
 
 
 def _scan_segment_seqs(path: str) -> list[tuple[int, str]]:
     """(seq, json_body) per line WITHOUT parsing the JSON — each line is
-    ``{seq:012d} {json}``, so consumers can claim/filter on the cheap
-    integer prefix and json-parse only the lines they own. A torn trailing
-    line (publisher mid-write) is skipped — complete on the next poll."""
+    ``{seq:012d} {json}``, so consumers can filter on the cheap integer
+    prefix and json-parse only the lines they own."""
     try:
         with open(path) as f:
-            raw = f.read()
+            lines = f.read().splitlines()
     except FileNotFoundError:
-        return []  # acked/GC'd concurrently
-    out = []
-    for line in raw.splitlines():
-        if len(line) < 14 or line[12] != " ":
-            continue
-        try:
-            out.append((int(line[:12]), line[13:]))
-        except ValueError:
-            continue
-    return out
+        return []  # collected by a concurrent ack: all below the frontier
+    return [(int(line[:12]), line[13:]) for line in lines]
 
 
 def _claims_segment(path: str, partition_id: int, num_partitions: int) -> bool:
     """Whole-file partition claim: each segment is read by exactly one
     partition, so aggregate read cost over N partitions is ~1× the log —
     the earlier per-seq interleave made every partition read EVERY file
-    (N× raw I/O, the first streaming bottleneck at 32+ partitions).
-
-    The claim key is ``{first_seq}-{token}`` — the filename prefix shared
-    by a segment's open (``{first}-{token}.openseg``) and closed
-    (``{first}-{last}-{token}.seg``) forms — so ownership is stable across
-    the publisher's roll-rename. A key derived from the full filename
-    would flip owners mid-batch when a segment rolls between two
-    partitions' reads: one partition's claim set would double-deliver or
-    drop the rows the other already claimed."""
-    import zlib
-
-    stem = os.path.basename(path).rsplit(".", 1)[0]
-    parts = stem.split("-")
-    key = f"{parts[0]}-{parts[-1]}"
-    return zlib.crc32(key.encode()) % num_partitions == partition_id
-
-
-def _read_segment_lines(path: str) -> list[dict]:
-    """Fully-parsed records of a segment (publisher-restart scans)."""
-    out = []
-    for _seq, body in _scan_segment_seqs(path):
-        try:
-            out.append(json.loads(body))
-        except json.JSONDecodeError:
-            continue
-    return out
+    (N× raw I/O, the first streaming bottleneck at 32+ partitions). The
+    key is the file name, which never changes once a segment is visible."""
+    name = os.path.basename(path).encode()
+    return zlib.crc32(name) % num_partitions == partition_id
 
 
 class SpoolPublisher:
-    """Publisher: appends NDJSON lines to an open segment, flushing per
-    publish, and rolls the segment every ``segment_size`` messages
-    (``{first:012d}-{last:012d}-{token}.seg``).
+    """Buffers messages and seals them into the spool, one segment per
+    ``flush()``; ``close()`` and every ``segment_size``-th ``publish`` seal
+    too. ``publish`` alone makes nothing visible.
 
-    Sequence numbers order the spool (the broker's arrival order); a
-    per-publisher token makes filenames unique so CONCURRENT publishers
-    (e.g. foreachPartition sink tasks) can never overwrite each other —
-    colliding seqs are tolerated by the consumer (same offset position,
-    both delivered), matching how a broker serializes racing publishers
-    arbitrarily.
+    Seqs (the spool's order, the broker's arrival order) are assigned at
+    seal time, under the directory lock, from the spool's head: any number
+    of publishers — concurrent sink tasks, several bridges — can share one
+    directory, and one that starts after ack GC collected every segment
+    still lands above the ``FRONTIER`` floor.
     """
 
     def __init__(self, spool_dir: str, segment_size: int = SEGMENT_SIZE):
-        import uuid
-
         self.dir = spool_dir
         os.makedirs(spool_dir, exist_ok=True)
-        self.token = uuid.uuid4().hex[:8]
         self.segment_size = segment_size
-        closed, open_ = _scan_segments(spool_dir)
-        last = max((c[1] for c in closed), default=-1)
-        for path in open_:
-            for rec in _read_segment_lines(path):
-                last = max(last, rec["seq"])
-        # The FRONTIER file is the durable floor: after ack_upto GCs all
-        # closed segments, the segment scan alone would restart seqs BELOW
-        # the acked frontier — and reads clamp lo to the frontier, so
-        # those messages would be permanently masked (silent loss). The
-        # frontier outlives exactly the segments it subsumes.
-        self._next = max(last + 1, SpoolTransport(spool_dir).frontier())
-        self._fd = None
-        self._open_path = ""
-        self._open_start = 0
-        self._open_count = 0
+        self._buf: list[str] = []
 
     def publish(
         self,
@@ -165,11 +145,8 @@ class SpoolPublisher:
         qos: int = 1,
         retained: bool = False,
         properties: dict[str, str] | list[tuple[str, str]] | None = None,
-    ) -> int:
-        seq = self._next
-        self._next += 1
+    ) -> None:
         rec = {
-            "seq": seq,
             "topic": topic,
             "qos": qos,
             "retained": retained,
@@ -179,36 +156,34 @@ class SpoolPublisher:
             "payload_hex": payload.hex(),
             "timestamp": time.time(),
         }
-        if self._fd is None:
-            self._open_start = seq
-            self._open_path = os.path.join(
-                self.dir, f"{seq:012d}-{self.token}.openseg"
-            )
-            self._fd = open(self._open_path, "a")
-        self._fd.write(f"{seq:012d} {json.dumps(rec)}\n")
-        self._fd.flush()
-        self._open_count += 1
-        if self._open_count >= self.segment_size:
-            self._roll(seq)
-        return seq
+        # encoded now, outside the seal's lock, minus the opening brace:
+        # the seal prepends ``{"seq": n, `` once it knows n
+        self._buf.append(json.dumps(rec)[1:])
+        if len(self._buf) >= self.segment_size:
+            self.flush()
 
-    def _roll(self, last_seq: int) -> None:
-        self._fd.close()
-        dst = os.path.join(
-            self.dir, f"{self._open_start:012d}-{last_seq:012d}-{self.token}.seg"
-        )
-        os.rename(self._open_path, dst)
-        self._fd = None
-        self._open_count = 0
+    def flush(self) -> tuple[int, int] | None:
+        """Seal the buffered messages as one segment; returns its (first,
+        last) seq, or None when nothing was buffered. A seal that raises
+        has still taken the buffer: none of it is in the spool."""
+        if not self._buf:
+            return None
+        bodies, self._buf = self._buf, []
+        with _locked_dir(self.dir) as dir_fd:
+            first = SpoolTransport(self.dir).latest_seq()
+            last = first + len(bodies) - 1
+            path = os.path.join(self.dir, f"{first:012d}-{last:012d}.seg")
+            _write_synced(path + ".tmp", "".join(
+                f'{seq:012d} {{"seq": {seq}, {body}\n'
+                for seq, body in enumerate(bodies, first)
+            ))
+            os.rename(path + ".tmp", path)
+            os.fsync(dir_fd)
+        return first, last
 
     def close(self) -> None:
-        """Seal the open segment so ack can garbage-collect it."""
-        if self._fd is not None and self._open_count:
-            self._roll(self._next - 1)
-        elif self._fd is not None:
-            self._fd.close()
-            os.remove(self._open_path)
-            self._fd = None
+        """Seal whatever is still buffered."""
+        self.flush()
 
 
 class SpoolTransport:
@@ -217,10 +192,10 @@ class SpoolTransport:
     Offsets are ``{"seq": n}`` — messages with seq < n are part of committed
     or in-flight batches. ``ack_upto`` advances the ``FRONTIER`` file (the
     broker's per-session acked position, exactly like PUBACKs on checkpoint
-    completion, ``EMQXSourceReader.java:182-202``) and deletes closed
-    segments wholly below it. Reads never return messages below the
-    frontier, so a fresh reader incarnation sees only the un-acked backlog;
-    crash before commit → frontier unmoved → full redelivery.
+    completion, ``EMQXSourceReader.java:182-202``) and deletes segments
+    wholly below it. Reads never return messages below the frontier, so a
+    fresh reader incarnation sees only the un-acked backlog; crash before
+    commit → frontier unmoved → full redelivery.
     """
 
     def __init__(self, spool_dir: str):
@@ -237,27 +212,24 @@ class SpoolTransport:
             return 0
 
     def latest_seq(self) -> int:
-        closed, open_ = _scan_segments(self.dir)
-        last = max((c[1] for c in closed), default=-1)
-        for path in open_:
-            for seq, _body in _scan_segment_seqs(path):
-                last = max(last, seq)
-        return last + 1
+        """One past the newest segment's last seq, from the file names
+        alone; never below the frontier, so a fully collected spool keeps
+        its position."""
+        segs = _scan_segments(self.dir)
+        return max(segs[-1][1] + 1 if segs else 0, self.frontier())
 
     def _claimed_rows(
         self, lo: int, end: int, partition_id: int, num_partitions: int
     ) -> list[tuple[int, str]]:
         """(seq, json_body) rows of [lo, end) owned by this partition, in
-        seq order. Segments (open and closed alike) are whole-file claimed
-        via the roll-stable key — see ``_claims_segment``. At high rates a
-        batch spans many segments, spreading work over all partitions; a
-        low-rate single-publisher tail lands on one partition, which is
-        fine (3 messages don't need 32 tasks)."""
-        closed, open_ = _scan_segments(self.dir)
+        seq order (segments are disjoint and listed in order). Segments are
+        whole-file claimed — see ``_claims_segment``. A batch that spans
+        many segments spreads over all partitions; one small segment lands
+        on one partition, which is fine (3 messages don't need 32 tasks)."""
         rows: list[tuple[int, str]] = []
-        paths = [p for first, last, p in closed if last >= lo and first < end]
-        paths.extend(open_)
-        for path in paths:
+        for first, last, path in _scan_segments(self.dir):
+            if last < lo or first >= end:
+                continue
             if num_partitions > 1 and not _claims_segment(
                 path, partition_id, num_partitions
             ):
@@ -267,7 +239,6 @@ class SpoolTransport:
                 for seq, body in _scan_segment_seqs(path)
                 if lo <= seq < end
             )
-        rows.sort()
         return rows
 
     def read_range_columns(
@@ -286,10 +257,7 @@ class SpoolTransport:
         if lo >= end:
             return cols
         for seq, body in self._claimed_rows(lo, end, partition_id, num_partitions):
-            try:
-                rec = json.loads(body)
-            except json.JSONDecodeError:
-                continue  # torn trailing line
+            rec = json.loads(body)
             cols["seq"].append(seq)
             cols["topic"].append(rec["topic"])
             cols["qos"].append(rec["qos"])
@@ -300,41 +268,26 @@ class SpoolTransport:
         return cols
 
     def ack_upto(self, end: int) -> int:
-        """Advance the acked frontier to ``end`` and GC closed segments
-        wholly below it; returns the number of segments collected."""
-        if end > self.frontier():
-            os.makedirs(self.dir, exist_ok=True)
-            tmp = self._frontier_path() + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(end))
-            os.rename(tmp, tmp[: -len(".tmp")])
+        """Advance the acked frontier to ``end`` and collect the segments
+        wholly below it; returns the number of segments collected.
+
+        Under the directory lock, the new ``FRONTIER`` is durable (file
+        fsync, rename, directory fsync) before anything is unlinked. A
+        ``*.tmp`` found under the lock belongs to a dead writer (seals
+        write theirs only while holding it), so it goes too."""
         n = 0
-        closed, open_ = _scan_segments(self.dir)
-        for _first, last, path in closed:
-            if last < end:
-                try:
+        with _locked_dir(self.dir) as dir_fd:
+            if end > self.frontier():
+                tmp = self._frontier_path() + ".tmp"
+                _write_synced(tmp, str(end))
+                os.rename(tmp, self._frontier_path())
+                os.fsync(dir_fd)
+            for path in glob.glob(os.path.join(glob.escape(self.dir), "*.tmp")):
+                os.remove(path)
+            for _first, last, path in _scan_segments(self.dir):
+                if last < end:
                     os.remove(path)
                     n += 1
-                except FileNotFoundError:
-                    pass
-        # Dead open segments (crashed publisher, never rolled): collectable
-        # once every line is below the frontier AND the file has been quiet
-        # for a while — a LIVE publisher may still hold the fd and append
-        # seqs ≥ frontier, which an unlink would silently drop.
-        for path in open_:
-            seqs = [s for s, _b in _scan_segment_seqs(path)]
-            if not seqs or max(seqs) >= end:
-                continue
-            try:
-                quiet = time.time() - os.path.getmtime(path)
-            except OSError:
-                continue
-            if quiet >= OPENSEG_GC_QUIET_S:
-                try:
-                    os.remove(path)
-                    n += 1
-                except FileNotFoundError:
-                    pass
         return n
 
 

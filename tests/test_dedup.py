@@ -639,50 +639,3 @@ def test_normalized_dedup_merges_case_and_whitespace_variants(spark, tmp_path):
         spark.read.parquet(os.path.join(sf, "documents.parquet"))
     ).collect()}
     assert exact[0] == 1, exact  # byte-exact keeps them apart
-
-
-def test_simhash_fingerprint_artifact_is_shared_and_invalidated(
-    spark, sf_dir, tmp_path
-):
-    """VERDICT r8 item 3: the SimHash UDF corpus scan is materialized once
-    per (session, corpus) and shared by dedup_simhash, dedup_simhash_hamming
-    and (via composition) dedup_method_agreement — and a DIFFERENT corpus
-    must evict it, never serve stale fingerprints."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from flink_emqx_connector_spark.plans import QUERIES
-    from flink_emqx_connector_spark.plans import dedup as P
-
-    P._FP_ARTIFACT.clear()
-    r1 = QUERIES["dedup_simhash"].spark(spark, sf_dir).collect()
-    assert len(P._FP_ARTIFACT) == 1
-    art1 = next(iter(P._FP_ARTIFACT.values()))
-    QUERIES["dedup_simhash_hamming"].spark(spark, sf_dir).collect()
-    # same corpus → same artifact object, no second scan materialized
-    assert next(iter(P._FP_ARTIFACT.values())) is art1
-    assert len(P._FP_ARTIFACT) == 1
-
-    # a different corpus evicts (at most ONE corpus held) and results
-    # reflect the NEW corpus
-    rows = [(0, "alpha beta gamma delta"), (1, "alpha beta gamma delta")]
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": [r[1] for r in rows],
-            "lang": ["en"] * 2,
-            "source": ["s"] * 2,
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }),
-        os.path.join(str(tmp_path), "documents.parquet"),
-    )
-    got = QUERIES["dedup_simhash"].spark(spark, str(tmp_path)).collect()
-    assert len(P._FP_ARTIFACT) == 1
-    assert next(iter(P._FP_ARTIFACT.values())) is not art1
-    assert [(r.n_docs, r.keeper) for r in got] == [(2, 0)]
-
-    # back to the main corpus: recomputed, identical output
-    r1b = QUERIES["dedup_simhash"].spark(spark, sf_dir).collect()
-    assert sorted(map(tuple, r1)) == sorted(map(tuple, r1b))

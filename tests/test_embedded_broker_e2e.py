@@ -10,13 +10,14 @@ real MQTT 5 packets, no fake-client shims.
 | recoverAfterFailure     | test_crash_without_ack_redelivers              |
 | startWithBrokerOffline  | test_broker_offline_at_start                   |
 
-Plus the bridge's ack-after-append ordering, wire-level round-trips,
-arrival-timestamp semantics (stamped in on_message, not at read), the
+Plus the bridge's ack-after-seal ordering, wire-level round-trips,
+arrival-timestamp semantics (stamped at ingest, not at read), the
 default-transport Spark read, and the MQTT sink publishing through the
 embedded client. Broker-only behaviors (shared-group re-dispatch,
 unsubscribe, graceful scale-in) drive manual-ack clients directly.
 """
 
+import json
 import socket
 import threading
 import time
@@ -80,12 +81,31 @@ def _spool_payloads(spool):
 
 def _crash(bridge):
     """Kill a bridge the way a driver crash would: no DISCONNECT, no
-    PUBACK for anything still un-acked, the spool's open segment left
-    unsealed, and no watchdog left to respawn members."""
+    PUBACK for anything still un-acked, nothing still queued sealed, and
+    no watchdog left to respawn members."""
     bridge._stopped.set()
     bridge._watchdog.join()
     for cli in bridge._clients:
         cli.loop_stop()
+    with bridge._queued:  # the flusher exits without sealing the queue
+        bridge._queue.clear()
+        bridge._queued.notify()
+    bridge._flusher.join()
+
+
+def _block_seals(monkeypatch):
+    """Make every spool seal wait for ``release``; ``entered`` is set by
+    the first seal that starts."""
+    entered, release = threading.Event(), threading.Event()
+    real_flush = SpoolPublisher.flush
+
+    def blocked_flush(self):
+        entered.set()
+        release.wait(30)
+        return real_flush(self)
+
+    monkeypatch.setattr(SpoolPublisher, "flush", blocked_flush)
+    return entered, release
 
 
 def _member(broker, cid, sink, topic):
@@ -129,19 +149,11 @@ def test_wire_publish_subscribe_roundtrip(broker):
 
 
 def test_transport_protocol_over_real_sockets(broker, tmp_path, monkeypatch):
-    """Ack after durable append, over real sockets: while the spool append
-    is blocked no PUBACK leaves the bridge, so the broker keeps the
-    message in the session's un-acked backlog; once the append returns
-    the PUBACK follows and the backlog clears."""
-    entered, release = threading.Event(), threading.Event()
-    real_publish = SpoolPublisher.publish
-
-    def blocked_publish(self, *args, **kwargs):
-        entered.set()
-        release.wait(30)
-        return real_publish(self, *args, **kwargs)
-
-    monkeypatch.setattr(SpoolPublisher, "publish", blocked_publish)
+    """Ack after the seal, over real sockets: while the seal is blocked
+    no PUBACK leaves the bridge and nothing is visible in the spool, so
+    the broker keeps the message in the session's un-acked backlog; once
+    the seal returns the PUBACK follows and the backlog clears."""
+    entered, release = _block_seals(monkeypatch)
     spool = str(tmp_path / "spool")
     bridge = _bridge(broker.port, "c-proto", spool)
     try:
@@ -161,6 +173,169 @@ def test_transport_protocol_over_real_sockets(broker, tmp_path, monkeypatch):
     finally:
         release.set()
         bridge.stop()
+
+
+def test_no_puback_before_its_segment_is_fsynced_and_renamed(
+    broker, tmp_path, monkeypatch
+):
+    """Every PUBACK the bridge sends comes after the fsync of the file
+    that holds its message, that file's rename to its final segment name,
+    and the fsync of the spool directory: a host crash after an ack can
+    never lose what the broker has forgotten."""
+    import os
+
+    events = []  # ("fsync", inode) | ("rename", dst, inode) | ("ack", mid)
+    real_fsync, real_rename = os.fsync, os.rename
+
+    def fsync(fd):
+        real_fsync(fd)
+        events.append(("fsync", os.fstat(fd).st_ino))
+
+    def rename(src, dst, **kw):
+        real_rename(src, dst, **kw)
+        events.append(("rename", os.path.abspath(dst), os.stat(dst).st_ino))
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "rename", rename)
+    spool = str(tmp_path / "spool")
+    bridge = _bridge(broker.port, "c-fsync", spool)
+    payload_of = {}  # mid -> payload
+    try:
+        cid = "c-fsync-bridge-0"
+        assert _wait(lambda: _subscribed(broker, cid))
+        (cli,) = bridge._clients
+        real_ack, real_on_message = cli.ack, cli.on_message
+
+        def on_message(client, userdata, msg):
+            payload_of[msg.mid] = bytes(msg.payload)
+            real_on_message(client, userdata, msg)
+
+        def ack(mid, qos):
+            events.append(("ack", mid))
+            real_ack(mid, qos)
+
+        cli.on_message, cli.ack = on_message, ack
+        pub = _publisher(broker.port)
+        sent = [b"m%02d" % i for i in range(20)]
+        for p in sent:
+            pub.publish("t/1", p, qos=1)
+        assert _wait(lambda: broker.session_backlog(cid) == 0 and len(
+            [e for e in events if e[0] == "ack"]) == len(sent))
+        pub.disconnect()
+    finally:
+        bridge.stop()
+
+    segment_of = {}  # payload -> final segment path
+    for name in os.listdir(spool):
+        if name.endswith(".seg"):
+            path = os.path.abspath(os.path.join(spool, name))
+            with open(path) as f:  # lines are "{seq:012d} {json record}"
+                for line in f:
+                    rec = json.loads(line.split(" ", 1)[1])
+                    segment_of[bytes.fromhex(rec["payload_hex"])] = path
+    assert sorted(segment_of) == sent
+    dir_ino = os.stat(spool).st_ino
+    for k, ev in enumerate(events):
+        if ev[0] != "ack":
+            continue
+        seg = segment_of[payload_of[ev[1]]]
+        renamed = [
+            i for i, e in enumerate(events[:k]) if e[0] == "rename" and e[1] == seg
+        ]
+        assert renamed, f"ack of {payload_of[ev[1]]!r} before its segment's rename"
+        r = renamed[0]
+        assert ("fsync", events[r][2]) in events[:r], "segment renamed unsynced"
+        assert ("fsync", dir_ino) in events[r + 1 : k], "ack before the dir fsync"
+
+
+def test_stop_seals_and_acks_everything_queued(broker, tmp_path, monkeypatch):
+    """``stop()`` drains the flusher: messages queued behind a slow seal
+    are sealed and acked before the members disconnect."""
+    entered, release = _block_seals(monkeypatch)
+    spool = str(tmp_path / "spool")
+    bridge = _bridge(broker.port, "c-stop", spool)
+    cid = "c-stop-bridge-0"
+    try:
+        assert _wait(lambda: _subscribed(broker, cid))
+        pub = _publisher(broker.port)
+        pub.publish("t/1", b"0", qos=1).wait_for_publish()
+        assert entered.wait(10)
+        for p in (b"1", b"2"):
+            pub.publish("t/1", p, qos=1).wait_for_publish()
+        assert _wait(lambda: len(bridge._queue) == 2)
+        stopper = threading.Thread(target=bridge.stop)
+        stopper.start()
+        assert _wait(bridge._stopped.is_set)
+        release.set()
+        stopper.join(30)
+        assert not stopper.is_alive()
+        assert sorted(_spool_payloads(spool)) == [b"0", b"1", b"2"]
+        assert broker.session_backlog(cid) == 0
+        pub.disconnect()
+    finally:
+        release.set()
+        bridge.stop()
+
+
+def test_dead_member_ack_is_dropped_and_redelivered(broker, tmp_path, monkeypatch):
+    """A member that dies while its message's seal is in flight never
+    acks it: the flusher drops that ack, and the broker redelivers the
+    message to the respawned member — a duplicate spool row, not a loss."""
+    entered, release = _block_seals(monkeypatch)
+    spool = str(tmp_path / "spool")
+    bridge = _bridge(broker.port, "c-dead", spool)
+    bridge.WATCHDOG_INTERVAL = 0.3
+    cid = "c-dead-bridge-0"
+    try:
+        assert _wait(lambda: _subscribed(broker, cid))
+        victim = bridge._clients[0]
+        acks = []
+        victim.ack = lambda mid, qos: acks.append(mid)
+        pub = _publisher(broker.port)
+        pub.publish("t/1", b"x", qos=1).wait_for_publish()
+        assert entered.wait(10)
+        victim._running = False
+        victim._close_sock()
+        assert _wait(lambda: not victim._thread.is_alive())
+        release.set()
+        assert _wait(lambda: _spool_payloads(spool) == [b"x", b"x"], timeout=30)
+        assert _wait(lambda: broker.session_backlog(cid) == 0)
+        assert acks == []
+        pub.disconnect()
+    finally:
+        release.set()
+        bridge.stop()
+
+
+def test_seal_failure_acks_nothing_and_fails_the_query(broker, tmp_path, monkeypatch):
+    """A seal that raises leaves its whole group un-acked at the broker,
+    and the source's ``latestOffset`` raises that error instead of
+    planning batches over a spool that stopped growing."""
+    from flink_emqx_connector_spark.sources.emqx import _BRIDGES, EMQXStreamReader
+
+    def full_disk(self):
+        raise OSError(28, "No space left on device")
+
+    monkeypatch.setattr(SpoolPublisher, "flush", full_disk)
+    r = EMQXStreamReader(None, {
+        "host": "127.0.0.1", "port": str(broker.port), "topic": "t/#",
+        "group": "gfail", "clientid": "c-fail",
+        "spool_dir": str(tmp_path / "spool"),
+    })
+    cid = "c-fail-bridge-0"
+    try:
+        assert _wait(lambda: _subscribed(broker, cid))
+        pub = _publisher(broker.port)
+        for p in (b"0", b"1"):
+            pub.publish("t/1", p, qos=1).wait_for_publish()
+        assert _wait(lambda: _BRIDGES[r._bridge_key].error is not None)
+        time.sleep(0.3)  # a wrong PUBACK would land in here
+        assert broker.session_backlog(cid) == 2
+        with pytest.raises(OSError, match="No space left"):
+            r.latestOffset()
+        pub.disconnect()
+    finally:
+        r.stop()
 
 
 def test_arrival_timestamp_stamped_in_on_message(broker, tmp_path):

@@ -30,6 +30,7 @@ def test_dedup_on_message_key_absorbs_redelivery(spark, tmp_path):
     # msg_id rides in MQTT5 user-properties; ids 0..4, id 2 delivered twice
     for i in [0, 1, 2, 2, 3, 4]:
         pub.publish("t/1", f"payload-{i}".encode(), properties={"msg_id": str(i)})
+    pub.flush()
 
     register_emqx_source(spark)
     df = (

@@ -439,6 +439,17 @@ def test_dynamic_overwrite_touches_only_the_backfilled_day(spark, sf_dir):
             assert out[d] == n  # every other partition untouched
 
 
+def test_dynamic_overwrite_rejects_nonpositive_write_splits(monkeypatch):
+    """A salt modulus below 1 is refused before any Spark work: ``pmod``
+    by 0 is null, which would put each day's rows back in one task."""
+    import pytest
+
+    for bad in ("0", "-2"):
+        monkeypatch.setenv("SPARK_GRAFT_DAY_WRITE_SPLITS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_DAY_WRITE_SPLITS"):
+            _run("dynamic_partition_overwrite", None, None)
+
+
 # ---------- X110 schema evolution ----------
 
 

@@ -1102,6 +1102,6 @@ def test_fd_violation_audit_single_join(plans):
 
     p = plans("fd_violation_audit")
     assert _parquet_scan_nodes(p) == 2, p
-    assert len(set(re.findall(r"\((\d+)\) [A-Za-z]*HashJoin", p))) == 1, p
+    assert len(set(re.findall(r"\((\d+)\) [A-Za-z]*(?:HashJoin|SortMergeJoin)", p))) == 1, p
     assert "Generate" in p, p  # the 4-way census explode
     assert "ExistingRDD" not in p, p  # nothing fact-sized is materialized

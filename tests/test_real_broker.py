@@ -127,6 +127,10 @@ def _crash(bridge):
         sock = cli.socket() if hasattr(cli, "socket") else None
         if sock is not None:  # paho keeps the socket open after loop_stop
             sock.close()
+    with bridge._queued:  # the flusher exits without sealing the queue
+        bridge._queue.clear()
+        bridge._queued.notify()
+    bridge._flusher.join()
 
 
 def _publisher(host, port):

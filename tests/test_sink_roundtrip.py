@@ -2,6 +2,7 @@
 source — the loop the reference never closed (it has no production sink,
 SURVEY.md §2.1 S10-S11)."""
 
+import time
 import uuid
 
 from pyspark.sql import functions as F
@@ -14,8 +15,6 @@ def test_streaming_pipe_through_mqtt_sink(spark, tmp_path):
     """Full streaming pipe: consume spool A → transform → foreachBatch
     publish to spool B → consume spool B. The streaming write path the
     reference never had."""
-    import time
-
     from flink_emqx_connector_spark.sinks import foreach_batch_publisher
     from flink_emqx_connector_spark.sources.transport import SpoolPublisher
 
@@ -24,6 +23,7 @@ def test_streaming_pipe_through_mqtt_sink(spark, tmp_path):
     pub = SpoolPublisher(spool_a)
     for i in range(6):
         pub.publish("in/t", str(i).encode(), qos=1)
+    pub.flush()
 
     register_emqx_source(spark)
     upstream = (
@@ -144,10 +144,70 @@ def test_stream_writer_format_emqx_spool(spark, tmp_path):
     ]
 
 
+def test_sink_spool_read_back_by_a_concurrent_stream(spark, tmp_path):
+    """Every row one stream writes with ``writeStream.format("emqx")`` and
+    ``transport=spool`` is read back, once, by a second stream that
+    consumes and acks that spool at the same time: concurrent sink tasks
+    each seal their own segment, and a commit never masks a segment that
+    becomes visible after it."""
+    from flink_emqx_connector_spark.sources.transport import SpoolPublisher
+
+    spool_a, spool_b = str(tmp_path / "a"), str(tmp_path / "b")
+    n = 8_000
+    pub = SpoolPublisher(spool_a)
+    for i in range(n):
+        pub.publish("in/t", b"%05d" % i, qos=1)
+    pub.close()
+
+    register_emqx_source(spark)
+    writer = (
+        spark.readStream.format("emqx")
+        .option("transport", "spool")
+        .option("spool_dir", spool_a)
+        .option("partitions", "4")
+        .option("max_records_per_batch", "1000")
+        .load()
+        .select(F.lit("out/t").alias("topic"), "payload")
+        .writeStream.format("emqx")
+        .option("transport", "spool")
+        .option("spool_dir", spool_b)
+        .option("checkpointLocation", str(tmp_path / "ckpt_w"))
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    name = f"second_{uuid.uuid4().hex[:8]}"
+    reader = (
+        spark.readStream.format("emqx")
+        .option("transport", "spool")
+        .option("spool_dir", spool_b)
+        .option("partitions", "2")
+        .option("max_records_per_batch", "500")
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / "ckpt_r"))
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+
+    def count():
+        return spark.sql(f"SELECT count(*) AS c FROM {name}").head()["c"]
+
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline and count() < n:
+            time.sleep(0.5)
+        time.sleep(1.0)  # a late duplicate would land in here
+    finally:
+        writer.stop()
+        reader.stop()
+    got = sorted(bytes(r.payload) for r in spark.sql(f"SELECT payload FROM {name}").collect())
+    assert got == [b"%05d" % i for i in range(n)], (len(got), n)
+
+
 def test_stream_writer_format_emqx_broker(spark, tmp_path):
     """writeStream.format("emqx") on the mqtt path: executor stream
     writers publish real MQTT 5 packets to the embedded broker."""
-    import time
 
     from flink_emqx_connector_spark.sources.mqtt_wire import (
         CallbackAPIVersion,

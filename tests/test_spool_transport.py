@@ -2,11 +2,14 @@
 
 Regression coverage for the publisher/frontier interaction: the FRONTIER
 file is the only durable record of position once ack GC has collected the
-segments it subsumes, so publisher seq recovery must honor it.
+segments it subsumes, so seal-time seq assignment must honor it; and for
+the sealed-segment invariants that keep racing writers and readers from
+losing rows.
 """
 
 import os
-import time
+
+import pytest
 
 from flink_emqx_connector_spark.sources.transport import (
     SpoolPublisher,
@@ -39,9 +42,8 @@ def test_publisher_seq_resumes_from_frontier_after_gc(tmp_path):
     assert not [f for f in os.listdir(spool) if f.endswith(".seg")]
 
     pub2 = SpoolPublisher(spool)
-    seq = pub2.publish("t/1", b"after-gc")
-    pub2.close()
-    assert seq == 6  # not 0
+    pub2.publish("t/1", b"after-gc")
+    assert pub2.flush() == (6, 6)  # not 0
     assert _payloads(t, 0, t.latest_seq()) == [b"after-gc"]
 
 
@@ -63,41 +65,84 @@ def test_consume_republish_reconsume_pipeline(tmp_path):
     assert seen == [f"{r}-{i}" for r in range(5) for i in range(3)]
 
 
-def test_ack_gc_collects_stale_open_segment(tmp_path):
-    """A crashed publisher's .openseg (never rolled) is collected once all
-    its seqs are below the frontier AND it has been quiet long enough;
-    a recently-written one is left alone (a live publisher may append)."""
+def test_ack_gc_collects_dead_writer_tmp(tmp_path, monkeypatch):
+    """A writer that dies between writing its fsynced ``.tmp`` and the
+    rename leaves the tmp behind, invisible to readers; the next ack
+    collects it (seals write their tmp only under the directory lock, so
+    an ack holding that lock never sees a live writer's)."""
     spool = str(tmp_path / "spool")
     pub = SpoolPublisher(spool)
-    pub.publish("t/1", b"a")
-    pub.publish("t/1", b"b")
-    # no close(): simulates a crash leaving an .openseg behind
-    open_segs = [f for f in os.listdir(spool) if f.endswith(".openseg")]
-    assert len(open_segs) == 1
+    pub.publish("t/1", b"lost")
+
+    def die(src, dst):
+        raise OSError("writer died before the rename")
+
+    monkeypatch.setattr(os, "rename", die)
+    with pytest.raises(OSError, match="died"):
+        pub.flush()
+    monkeypatch.undo()
+    assert [f for f in os.listdir(spool) if f.endswith(".tmp")]
 
     t = SpoolTransport(spool)
-    t.ack_upto(2)
-    # fresh file: NOT collected (quiet-period guard)
-    assert [f for f in os.listdir(spool) if f.endswith(".openseg")] == open_segs
+    assert t.latest_seq() == 0
+    assert t.ack_upto(0) == 0  # no segment collected, only the tmp
+    assert not [f for f in os.listdir(spool) if f.endswith(".tmp")]
+    pub.publish("t/1", b"next")
+    pub.close()
+    assert _payloads(t, 0, t.latest_seq()) == [b"next"]
 
-    stale = os.path.join(spool, open_segs[0])
-    old = time.time() - 3600
-    os.utime(stale, (old, old))
-    t.ack_upto(2)
-    assert not [f for f in os.listdir(spool) if f.endswith(".openseg")]
+
+def test_racing_publishers_never_land_under_the_frontier(tmp_path):
+    """Two publishers open on one spool; A's rows are read and acked
+    before B seals. Seqs are taken at seal time, so B's rows land above
+    the frontier and are read, not masked under it."""
+    spool = str(tmp_path / "spool")
+    a, b = SpoolPublisher(spool), SpoolPublisher(spool)
+    for i in range(10):
+        a.publish("t/a", b"a%d" % i)
+    a.close()
+    t = SpoolTransport(spool)
+    assert _payloads(t, 0, t.latest_seq()) == [b"a%d" % i for i in range(10)]
+    t.ack_upto(10)
+    for i in range(10):
+        b.publish("t/b", b"b%d" % i)
+    b.close()
+    assert t.latest_seq() == 20
+    assert _payloads(t, 0, t.latest_seq()) == [b"b%d" % i for i in range(10)]
+
+
+def test_listing_taken_earlier_reads_every_row_it_covered(tmp_path):
+    """A partition lists the spool once and then opens each listed file.
+    Whatever writers do in between, the files of that listing still hold
+    every row it covered: a visible segment is never renamed or changed."""
+    from unittest import mock
+
+    import flink_emqx_connector_spark.sources.transport as tr
+
+    spool = str(tmp_path / "spool")
+    pub = SpoolPublisher(spool, segment_size=8)
+    for i in range(5):
+        pub.publish("t/1", b"%d" % i)
+    pub.flush()
+    t = SpoolTransport(spool)
+    covered = t.latest_seq()
+    listing = tr._scan_segments(spool)
+    for i in range(5, 8):
+        pub.publish("t/1", b"%d" % i)
+    pub.close()
+    with mock.patch.object(tr, "_scan_segments", lambda _dir: listing):
+        assert _seqs(t, 0, covered) == list(range(5))
 
 
 def test_sink_partition_seals_segments(tmp_path):
-    """The sink's per-partition publisher closes (rolls) its segment so
-    ack GC can collect it."""
+    """The sink's per-partition publisher seals its rows, so readers see
+    them and ack GC can collect them."""
     from flink_emqx_connector_spark.sinks.emqx import _publish_partition
 
     spool = str(tmp_path / "spool")
     rows = [{"topic": "t/1", "payload": f"m{i}".encode()} for i in range(3)]
     _publish_partition(iter(rows), "spool", spool, "", 0, qos=1)
-    files = os.listdir(spool)
-    assert not [f for f in files if f.endswith(".openseg")]
-    assert [f for f in files if f.endswith(".seg")]
+    assert [f for f in os.listdir(spool) if f.endswith(".seg")]
     t = SpoolTransport(spool)
     assert _payloads(t, 0, t.latest_seq()) == [b"m0", b"m1", b"m2"]
     assert t.ack_upto(t.latest_seq()) >= 1
@@ -116,7 +161,7 @@ def test_partition_claims_disjoint_and_complete(tmp_path):
     pub = SpoolPublisher(spool, segment_size=16)
     for i in range(200):
         pub.publish("t/1", str(i).encode())
-    # leave the last segment open: claims must cover the tail too
+    pub.flush()  # the short tail segment: claims must cover it too
     t = SpoolTransport(spool)
     end = t.latest_seq()
     n_parts = 8
@@ -133,36 +178,14 @@ def test_partition_claims_disjoint_and_complete(tmp_path):
         for p in range(n_parts):
             got += _payloads(t, 0, end, p, n_parts)
     assert sorted(got) == sorted(str(i).encode() for i in range(200))
-    n_files = len([f for f in os.listdir(spool) if f.endswith((".seg", ".openseg"))])
+    n_files = len([f for f in os.listdir(spool) if f.endswith(".seg")])
     # whole-file claims: each file scanned once across ALL partitions
     assert len(scans) == n_files, (len(scans), n_files)
 
 
-def test_partition_claim_stable_across_roll(tmp_path):
-    """Claim ownership must not change when a segment rolls from open to
-    closed between two partitions' reads of the same batch window."""
-    import flink_emqx_connector_spark.sources.transport as tr
-
-    spool = str(tmp_path / "spool")
-    pub = SpoolPublisher(spool, segment_size=1000)  # stays open
-    for i in range(20):
-        pub.publish("t/1", str(i).encode())
-    t = SpoolTransport(spool)
-    end = t.latest_seq()
-    n_parts = 4
-    before = {
-        p: _seqs(t, 0, end, p, n_parts) for p in range(n_parts)
-    }
-    pub.close()  # roll: .openseg -> .seg
-    after = {
-        p: _seqs(t, 0, end, p, n_parts) for p in range(n_parts)
-    }
-    assert before == after
-
-
 def test_claims_property_random_schedules():
     """Property: for ANY publisher schedule (message count, segment size,
-    roll points, multiple publishers) and ANY partition count, the
+    multiple publishers, an unsealed tail) and ANY partition count, the
     partition claims are a disjoint complete cover of every batch window."""
     import tempfile
 
@@ -173,13 +196,13 @@ def test_claims_property_random_schedules():
         seg_size=st.integers(min_value=1, max_value=7),
         counts=st.lists(st.integers(min_value=0, max_value=20), min_size=1, max_size=4),
         n_parts=st.integers(min_value=1, max_value=9),
-        close_last=st.booleans(),
+        seal_last=st.booleans(),
         window=st.tuples(
             st.integers(min_value=0, max_value=10),
             st.integers(min_value=0, max_value=60),
         ),
     )
-    def check(seg_size, counts, n_parts, close_last, window):
+    def check(seg_size, counts, n_parts, seal_last, window):
         with tempfile.TemporaryDirectory() as d:
             spool = str(d) + "/s"
             total = 0
@@ -188,7 +211,7 @@ def test_claims_property_random_schedules():
                 for _ in range(cnt):
                     pub.publish("t/1", str(total).encode())
                     total += 1
-                if close_last or pi < len(counts) - 1:
+                if seal_last or pi < len(counts) - 1:
                     pub.close()
             t = SpoolTransport(spool)
             lo, span = window
@@ -199,3 +222,56 @@ def test_claims_property_random_schedules():
             assert sorted(seen) == list(range(min(lo, hi), hi))
 
     check()
+
+
+def test_concurrent_seals_and_acks_lose_nothing(tmp_path):
+    """Stress: more writer threads than cores seal small segments while a
+    reader reads and acks whatever is visible. Every message is read
+    exactly once, and the seqs read are exactly 0..n-1 in order."""
+    import sys
+    import threading
+
+    spool = str(tmp_path / "spool")
+    t = SpoolTransport(spool)
+    writers, per = 8, 30
+    seen = []
+    done = threading.Event()
+
+    def write(w):
+        pub = SpoolPublisher(spool, segment_size=3)
+        for i in range(per):
+            pub.publish("t/1", b"%d-%d" % (w, i))
+        pub.close()
+
+    def read():
+        lo = 0
+        while True:
+            last_pass = done.is_set()
+            head = t.latest_seq()
+            cols = t.read_range_columns(lo, head, 0, 1)
+            seen.extend(zip(cols["seq"], cols["payload"]))
+            t.ack_upto(head)
+            lo = head
+            if last_pass:
+                return
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        reader = threading.Thread(target=read)
+        reader.start()
+        threads = [threading.Thread(target=write, args=(w,)) for w in range(writers)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(60)
+        done.set()
+        reader.join(60)
+        assert not reader.is_alive()
+        assert not any(th.is_alive() for th in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert [s for s, _p in seen] == list(range(writers * per))
+    assert sorted(p for _s, p in seen) == sorted(
+        b"%d-%d" % (w, i) for w in range(writers) for i in range(per)
+    )

@@ -56,6 +56,7 @@ def test_message_delivery(spark, tmp_path):
     pub = SpoolPublisher(spool)
     for p in [b"1", b"2", b"3"]:
         pub.publish("t/1", p, qos=1)
+    pub.flush()
     name = f"wc_{uuid.uuid4().hex[:8]}"
     q = _start_query(spark, spool, tmp_path, name)
     try:
@@ -75,6 +76,7 @@ def test_graceful_stop_and_restart(spark, tmp_path):
     pub = SpoolPublisher(spool)
     for i in range(10):
         pub.publish("t/1", str(i).encode(), qos=1)
+    pub.flush()
     name = f"wc_{uuid.uuid4().hex[:8]}"
     q = _start_query(spark, spool, tmp_path, name)
     try:
@@ -88,6 +90,7 @@ def test_graceful_stop_and_restart(spark, tmp_path):
 
     for i in range(5):
         pub.publish("t/1", b"extra", qos=1)
+    pub.flush()
     q2 = _start_query(spark, spool, tmp_path, name)
     try:
         assert _wait(
@@ -110,6 +113,7 @@ def test_redelivery_without_commit(tmp_path):
     pub = SpoolPublisher(spool)
     for i in range(10):
         pub.publish("t/1", str(i).encode(), qos=1)
+    pub.flush()
 
     def drain(reader):
         rows = []
@@ -144,6 +148,7 @@ def test_restart_mid_backlog_exactly_once(spark, tmp_path):
     N = 4000
     for i in range(N):
         pub.publish("t/1", f"w{i % 7}".encode(), qos=1)
+    pub.flush()
 
     from flink_emqx_connector_spark.streaming import start_wordcount_stream
 
@@ -190,13 +195,31 @@ def test_restart_mid_backlog_exactly_once(spark, tmp_path):
 
 
 def test_concurrent_publishers_all_delivered(tmp_path):
-    """Two racing publishers (e.g. parallel sink tasks) may collide on
-    seqs; the consumer tolerates collisions and delivers every message —
-    the broker-serializes-racing-publishers semantics."""
+    """Two racing publishers (e.g. parallel sink tasks) sealing one
+    segment per message: every message is delivered, under its own seq —
+    seqs are assigned at seal time under the spool's lock, the way a
+    broker serializes racing publishers."""
+    import threading
+
     spool = _spool(tmp_path)
-    p1, p2 = SpoolPublisher(spool), SpoolPublisher(spool)
-    for i in range(10):
-        (p1 if i % 2 == 0 else p2).publish("t/1", f"m{i}".encode(), qos=1)
+
+    def publish_every_other(first):
+        pub = SpoolPublisher(spool)
+        for i in range(first, 20, 2):
+            pub.publish("t/1", f"m{i}".encode(), qos=1)
+            pub.flush()
+
+    threads = [
+        threading.Thread(target=publish_every_other, args=(k,)) for k in (0, 1)
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(30)
+    assert not any(th.is_alive() for th in threads)
+    assert SpoolTransport(spool).read_range_columns(0, 20, 0, 1)["seq"] == list(
+        range(20)
+    )
 
     opts = {"transport": "spool", "spool_dir": spool, "partitions": "2"}
     r = EMQXStreamReader(None, opts)
@@ -204,7 +227,7 @@ def test_concurrent_publishers_all_delivered(tmp_path):
     for p in r.partitions(r.initialOffset(), r.latestOffset()):
         for batch in r.read(p):
             payloads.extend(bytes(row["payload"]) for row in batch.to_pylist())
-    assert sorted(payloads) == sorted(f"m{i}".encode() for i in range(10))
+    assert sorted(payloads) == sorted(f"m{i}".encode() for i in range(20))
 
 
 def test_backlog_admission_control(tmp_path):
@@ -215,6 +238,7 @@ def test_backlog_admission_control(tmp_path):
     pub = SpoolPublisher(spool)
     for i in range(5000):
         pub.publish("t/1", str(i).encode(), qos=1)
+    pub.flush()
 
     r = EMQXStreamReader(
         None,
@@ -254,6 +278,7 @@ def test_broker_offline_at_start(spark, tmp_path):
         pub = SpoolPublisher(spool)  # broker comes online
         for i in range(10):
             pub.publish("t/1", str(i).encode(), qos=1)
+        pub.flush()
         assert _wait(
             lambda: spark.sql(f"SELECT sum(cnt) AS s FROM {name}").head()["s"] == 10
         )
@@ -265,9 +290,11 @@ def test_envelope_schema(spark, tmp_path):
     """The source yields the canonical envelope (FIXTURES.md §1) including
     MQTT5 user-properties and binary payload."""
     spool = _spool(tmp_path)
-    SpoolPublisher(spool).publish(
+    pub = SpoolPublisher(spool)
+    pub.publish(
         "t/x/y", b"\x00\x01hello", qos=2, properties={"k1": "v1", "k2": "v2"}
     )
+    pub.close()
     from flink_emqx_connector_spark.sources import register_emqx_source
 
     register_emqx_source(spark)

@@ -52,6 +52,8 @@ def test_stream_stream_interval_join(spark, tmp_path):
     bp.publish("b/1", _payload(1, base + 300))
     bp.publish("b/1", _payload(2, base + 0))
     bp.publish("b/1", _payload(3, base + 0))
+    vp.flush()
+    bp.flush()
 
     def decode(df, prefix):
         cols = F.split(F.col("payload").cast("string"), ",")
@@ -120,6 +122,7 @@ def test_rolling_sum_with_state(spark, tmp_path, provider):
     pub = SpoolPublisher(spool)
     for p in [b"a", b"b", b"a"]:
         pub.publish("t/1", p)
+    pub.flush()
 
     msgs = _source(spark, spool)
     keyed = msgs.select(
@@ -147,6 +150,7 @@ def test_rolling_sum_with_state(spark, tmp_path, provider):
         # publish more 'a' → state carries: a→4 appears in a later batch
         pub.publish("t/1", b"a")
         pub.publish("t/1", b"a")
+        pub.flush()
         assert _wait(
             lambda: ("a", 4)
             in {
@@ -206,6 +210,7 @@ def test_rolling_sum_transform_with_state(spark, tmp_path):
         pub = SpoolPublisher(spool)
         for w in ["a", "b", "a", "a", "b"]:
             pub.publish("t/1", w.encode(), qos=1)
+        pub.flush()
         keyed = _source(spark, spool).select(
             F.col("payload").cast("string").alias("word"), F.lit(1).alias("n")
         )
@@ -247,6 +252,7 @@ def test_dedup_within_watermark_bounded_state(spark, tmp_path):
     pub = SpoolPublisher(spool)
     for mid in ["m1", "m2", "m1", "m3", "m2", "m1"]:  # duplicates interleaved
         pub.publish("t/1", mid.encode(), qos=1)
+    pub.flush()
     deduped = (
         _source(spark, spool)
         .select(
@@ -284,6 +290,7 @@ def test_event_time_window_with_watermark(spark, tmp_path):
     pub = SpoolPublisher(spool)
     for p in [b"x", b"y", b"x"]:
         pub.publish("t/1", p)
+    pub.flush()
 
     msgs = _source(spark, spool)
     agg = (
@@ -448,6 +455,7 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     pub.publish("t/1", b"m-1", qos=1)  # redelivered copy
     pub.publish("t/1", b"m-2", qos=1)
     pub.publish("t/2", b"m-1", qos=1)  # same payload, different topic: keep
+    pub.flush()
     out = dedup_within_watermark(_source(spark, spool), delay="10 minutes")
     name = f"dedup_{uuid.uuid4().hex[:8]}"
     q = (
@@ -484,6 +492,7 @@ def test_stream_static_enrichment_join(spark, tmp_path):
     pub.publish("sensors/berlin", b"21.5", qos=1)
     pub.publish("sensors/tokyo", b"27.0", qos=1)
     pub.publish("sensors/unmapped", b"0.0", qos=1)
+    pub.flush()
     dim = spark.createDataFrame(
         [("sensors/berlin", "EU"), ("sensors/tokyo", "APAC")],
         "topic STRING, region STRING",
@@ -542,6 +551,8 @@ def test_stream_stream_left_outer_join_emits_nulls(spark, tmp_path):
     # forcing the unmatched view's state to expire and emit
     vp.publish("v/1", _payload(98, base + 7200))
     bp.publish("b/1", _payload(99, base + 7200))
+    vp.flush()
+    bp.flush()
 
     def decode(df, prefix):
         cols = F.split(F.col("payload").cast("string"), ",")
@@ -597,6 +608,7 @@ def test_observed_metrics_on_envelope_stream(spark, tmp_path):
     pub = SpoolPublisher(spool)
     for i in range(10):
         pub.publish("t/1", str(i).encode() * 3, qos=1)
+    pub.flush()
     observed = _source(spark, spool).observe(
         "envelope_metrics",
         F.count(F.lit(1)).alias("n_msgs"),
@@ -659,6 +671,7 @@ def test_materialized_latest_state_view(spark, tmp_path):
     pub.publish("dev/1", b"v1", qos=1)
     pub.publish("dev/2", b"a1", qos=1)
     pub.publish("dev/1", b"v2", qos=1)  # newer arrival wins
+    pub.flush()
     run_until(3)
     s1 = {r.topic: r.val for r in read_state(spark, state).collect()}
     assert s1 == {"dev/1": "v2", "dev/2": "a1"}, s1
@@ -666,6 +679,7 @@ def test_materialized_latest_state_view(spark, tmp_path):
     # restart: more updates merge into the on-disk state
     pub.publish("dev/2", b"a2", qos=1)
     pub.publish("dev/3", b"new", qos=1)
+    pub.flush()
     run_until(5)
     s2 = {r.topic: r.val for r in read_state(spark, state).collect()}
     assert s2 == {"dev/1": "v2", "dev/2": "a2", "dev/3": "new"}, s2
