@@ -23,4 +23,11 @@ semantics genuinely require them (MinHash, SimHash, multimodal feature
 extraction) and are always Arrow-vectorized.
 """
 
+from . import pyworker
+
 __version__ = "0.1.0"
+
+# Spark's planner workers (data-source planning, the sink's commit) fork
+# from pyspark's stock daemon, not ``pyworker``; they import this package
+# when they unpickle the source or the writer.
+pyworker.install()

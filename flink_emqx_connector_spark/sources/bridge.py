@@ -45,6 +45,7 @@ point, and any number of bridges can seal into one.
 from __future__ import annotations
 
 import threading
+import time
 
 from .mqtt_wire import _CONNACK_PERMANENT
 from .transport import SpoolPublisher, _load_mqtt
@@ -105,6 +106,9 @@ class MqttSpoolBridge:
         )
         self._stopped = threading.Event()
         self.respawns = 0
+        # written by the flusher thread only; read through the properties
+        self._appended = self._acked = self._seals = 0
+        self._seal_s = 0.0
         self._flusher = threading.Thread(target=self._flush_loop, daemon=True)
         self._flusher.start()
         self._clients = [self._spawn_member(i) for i in range(members)]
@@ -224,17 +228,43 @@ class MqttSpoolBridge:
                         msg.topic, bytes(msg.payload), qos=msg.qos,
                         properties=list(getattr(props, "UserProperty", []) or []),
                     )
+                t0 = time.perf_counter()
                 self._pub.flush()
             except Exception as e:  # nothing of the group is acked
                 self.error = e
                 return
+            self._seal_s += time.perf_counter() - t0
+            self._seals += 1
+            self._appended += len(group)
             for cli, msg in group:
                 if self._member_dead(cli):
                     continue  # the broker redelivers it to the respawn
                 try:
                     cli.ack(msg.mid, msg.qos)
                 except OSError:
-                    pass  # connection gone: the broker redelivers it
+                    continue  # connection gone: the broker redelivers it
+                self._acked += 1
+
+    @property
+    def appended(self) -> int:
+        """Messages durably sealed into the spool."""
+        return self._appended
+
+    @property
+    def acked(self) -> int:
+        """Sealed messages acked to the broker; the rest are redelivered."""
+        return self._acked
+
+    @property
+    def seals(self) -> int:
+        """Segments sealed, one per group the flusher committed."""
+        return self._seals
+
+    @property
+    def seal_s(self) -> float:
+        """Seconds spent in seals: the segment write, its fsync, the
+        rename and the directory fsync."""
+        return self._seal_s
 
     def refused(self) -> list[int]:
         """The CONNACK codes when EVERY member was permanently refused

@@ -39,6 +39,13 @@ Transports:
 - ``spool`` — read a segment-log directory that something else fills
   (a sink, another bridge host, a test). Replayable; exactly-once via the
   offset WAL.
+
+Per-micro-batch cost: ``read()`` runs in a Python worker, but the worker
+round trip is no longer what a batch pays for. Most of it was each reused
+worker re-reading pyspark.zip before every task, which the
+``pyworker`` daemon that ``session.get_spark`` sets removes (see
+``flink_emqx_connector_spark/pyworker``). What is left per batch is the
+sink's commit worker and Spark's own ``walCommit`` and ``commitOffsets``.
 """
 
 from __future__ import annotations

@@ -277,6 +277,28 @@ def test_stop_seals_and_acks_everything_queued(broker, tmp_path, monkeypatch):
         bridge.stop()
 
 
+def test_bridge_counters_account_for_every_message(broker, tmp_path):
+    """``appended``, ``acked``, ``seals`` and ``seal_s`` count the
+    flusher's work; after ``stop()`` every sealed message is acked."""
+    spool = str(tmp_path / "spool")
+    bridge = _bridge(broker.port, "c-count", spool)
+    cid = "c-count-bridge-0"
+    try:
+        assert _wait(lambda: _subscribed(broker, cid))
+        assert (bridge.appended, bridge.acked, bridge.seals) == (0, 0, 0)
+        pub = _publisher(broker.port)
+        for i in range(20):
+            pub.publish("t/1", str(i).encode(), qos=1).wait_for_publish()
+        assert _wait(lambda: bridge.appended == 20)
+        pub.disconnect()
+    finally:
+        bridge.stop()
+    assert bridge.acked == bridge.appended == 20
+    assert 1 <= bridge.seals <= 20 and bridge.seal_s > 0
+    assert broker.session_backlog(cid) == 0
+    assert len(_spool_payloads(spool)) == 20
+
+
 def test_dead_member_ack_is_dropped_and_redelivered(broker, tmp_path, monkeypatch):
     """A member that dies while its message's seal is in flight never
     acks it: the flusher drops that ack, and the broker redelivers the
