@@ -746,6 +746,40 @@ def _verify_candidates(
     )
 
 
+#: Relative standard error of the MinHash dup-ratio probe's HLL sketch
+#: (Spark's default, spelled out because the probe's cut depends on it).
+_PROBE_RSD = 0.05
+
+
+def _dup_heavy(docs: DataFrame, text_col: str) -> bool:
+    """``minhash_lsh_pairs``' dup-ratio probe: whether ``docs`` has clearly
+    fewer distinct texts than rows. ONE corpus scan feeding an HLL sketch,
+    no materialization.
+
+    The branch it picks only selects a faster plan — both branches are
+    output-identical (identical texts have identical signatures, collide
+    in every band, screen at 1 and verify at exactly 1.0; the oracle
+    always canonicalizes), so an approximate count is safe. The r13 shape
+    paid md5 over the whole text column PLUS a full (doc, fp)
+    localCheckpoint PLUS an exact count_distinct shuffle before making the
+    same decision — on an already-distinct corpus (the common case) all
+    of it thrown away (driver-measured 3.4 s → 19.8 s). It is probed on
+    raw docs, not on the ≥n-words filtered frame: that filter would
+    evaluate split(text) across the whole corpus inside the probe scan,
+    and the distinct ratio of the raw corpus is the same signal.
+
+    The cut sits 3 relative standard errors below 1, so a corpus of
+    distinct texts reads as distinct: the generated corpus's 1,500 texts,
+    1,492 of them distinct, read 0.917–0.949 on some seeds, and a cut at
+    0.95 sent them down the dup-heavy branch (+0.3 s, same output).
+    """
+    probe = docs.agg(
+        F.count("*").alias("n"),
+        F.approx_count_distinct(text_col, rsd=_PROBE_RSD).alias("nd"),
+    ).collect()[0]
+    return (probe["nd"] or 0) < (1 - 3 * _PROBE_RSD) * (probe["n"] or 0)
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
@@ -769,8 +803,8 @@ def minhash_lsh_pairs(
     (≈ 0.99 at its 2.5σ floor, see ``_verify_candidates``) ≈ 0.98;
     pairs above the threshold survive both with higher probability.
 
-    **Exact-dup canonicalization first**: real corpora are heavily
-    duplicated (this repo's synthetic one is ~90% exact copies), and LSH
+    **Exact-dup canonicalization first**: real corpora are often heavily
+    duplicated (this repo's synthetic one is not: ~0.5% exact copies), and LSH
     over raw docs puts every copy of a text in the same buckets — pair
     blowup quadratic in copy count (367k candidates at sf0.1, ~0.1%
     precision). So: group docs by content digest, run the whole LSH
@@ -799,27 +833,10 @@ def minhash_lsh_pairs(
     base = docs.select(
         F.col(id_col).alias("doc"), F.col(text_col).alias(text_col)
     ).filter(F.size(F.split(F.col(text_col), " ")) >= F.lit(n))
-    # Cheap dup-ratio probe: ONE corpus scan feeding an HLL sketch, no
-    # materialization. The branch it picks only selects a faster plan —
-    # both branches are output-identical (identical texts have identical
-    # signatures, collide in every band, screen at 1 and verify at exactly
-    # 1.0; the oracle always canonicalizes), so an approximate count is
-    # safe. The r13 shape paid md5 over the whole text column PLUS a full
-    # (doc, fp) localCheckpoint PLUS an exact count_distinct shuffle before
-    # making the same decision — on an already-distinct corpus (the common
-    # case) all of it thrown away (driver-measured 3.4 s → 19.8 s). The
-    # digest proxy is now built ONLY inside the dup-heavy branch, where its
-    # three consumers (rep groups + both within-join legs) exist.
-    # (probed on raw docs, not `base`: the ≥n-words filter would evaluate
-    # split(text) across the whole corpus inside the probe scan — a full
-    # tokenize pass spent on a heuristic; the distinct ratio of the raw
-    # corpus is the same signal, and the branch choice is output-neutral)
-    probe = docs.agg(
-        F.count("*").alias("n"), F.approx_count_distinct(text_col).alias("nd")
-    ).collect()[0]
+    # probed on raw docs, not `base` (see ``_dup_heavy``)
     groups = None
     doc_fp = None
-    if (probe["nd"] or 0) < 0.95 * (probe["n"] or 0):
+    if _dup_heavy(docs, text_col):
         # Dup-heavy branch: one corpus text scan produces the 24-byte
         # (doc, fp) digest proxy, checkpointed EAGERLY (broadcast-thread
         # deadlock rule, OPTIMIZATION_r13.md); the rep groups AND the

@@ -35,11 +35,10 @@ acks go out, and acks wait for the seal.
 Scale posture: the bridge is ingestion I/O only (no decode, no compute) —
 one thread per shared-subscription member plus the flusher, fan-in
 bounded by broker delivery. Heavy lifting stays in executors reading the
-spool in parallel (whole-segment claims, ~1/N of the segments each; a
-segment holds one group, so a burst spreads over many segments and a
-trickle makes small ones). For multi-driver scale-out, run one bridge
-per topic-filter on any stable host; the spool directory is the handoff
-point, and any number of bridges can seal into one.
+spool in parallel (each reads an equal slice of a batch's seqs, however
+the seals cut them into segments). For multi-driver scale-out, run one
+bridge per topic-filter on any stable host; the spool directory is the
+handoff point, and any number of bridges can seal into one.
 """
 
 from __future__ import annotations

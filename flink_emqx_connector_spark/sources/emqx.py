@@ -69,9 +69,10 @@ _BRIDGES: dict[str, object] = {}
 
 @dataclass
 class EMQXPartition(InputPartition):
-    """One split = this partition's whole-segment claim on a micro-batch's
-    spool window (the reference's split is a clientid,
-    ``EMQXSourceSplit.java:7-26``; here the bridge members hold them)."""
+    """One split = the ``index``-th of ``num_partitions`` equal seq slices
+    of a micro-batch's spool window [start, end) (the reference's split is
+    a clientid, ``EMQXSourceSplit.java:7-26``; here the bridge members hold
+    them)."""
 
     index: int
     num_partitions: int

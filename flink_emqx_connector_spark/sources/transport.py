@@ -1,22 +1,27 @@
 """The segment-log spool: the durable handoff between MQTT ingest and the
 EMQX source.
 
-A spool is a directory of sealed segments, ``{first:012d}-{last:012d}.seg``
-with one NDJSON line per message, plus a ``FRONTIER`` file. A segment
-appears once, complete, under its final name, and never changes after.
+A spool is a directory of sealed segments, ``{first:012d}-{last:012d}.seg``,
+plus a ``FRONTIER`` file. A segment is plain NDJSON, one line per message,
+and line ``i`` has seq ``first + i``: the name is the only place a seq is
+stored. A segment appears once, complete, under its final name, and never
+changes after; one whose line count differs from ``last - first + 1``
+makes the read raise, and so does a line of the earlier
+``{seq:012d} {json}`` form (drain a spool written by that version before
+upgrading).
 
 - ``SpoolPublisher`` buffers messages and seals the buffer as one segment
   on ``flush()``. The driver-side bridge (``sources/bridge.py``) is its
   MQTT-facing writer; the sink's ``transport=spool`` leg is another.
-- ``SpoolTransport`` is the consumer view the source reads: a partition
-  claims whole segments by file name, *ack* advances the ``FRONTIER`` file
-  (the broker's session state) and garbage-collects fully-acked segments.
+- ``SpoolTransport`` is the consumer view the source reads: partition i of
+  N reads the i-th equal slice of a batch's seq window, opening only the
+  segments that overlap it; *ack* advances the ``FRONTIER`` file (the
+  broker's session state) and garbage-collects fully-acked segments.
   Un-acked messages survive restarts and are redelivered — the reference's
   at-least-once contract (``EMQXSourceReader.java:168-202``) on a seekable
   log, which the micro-batch offset WAL upgrades to exactly-once.
   A segment holds one seal: a bridge under a trickle seals a few messages
-  each, a burst or a sink task up to ``SEGMENT_SIZE``, so a batch of many
-  segments spreads over all partitions.
+  each, a burst or a sink task up to ``SEGMENT_SIZE``.
 
 Seals and acks hold an ``flock`` on the spool directory. A seal takes the
 next seq range, writes and fsyncs ``{segment}.tmp``, renames it to its
@@ -25,9 +30,9 @@ become visible in seq order and no reader commits past a seq that a slower
 writer makes visible later; a seq is never reused, also after a crash
 (``FRONTIER`` is made durable before the segments below it are unlinked).
 
-Records are ``{seq, topic, qos, retained, properties, payload_hex,
-timestamp}``; ``_load_mqtt`` picks the MQTT client the bridge and the sink
-speak through.
+Records are ``{topic, qos, retained, properties, payload_hex, timestamp}``
+with ``properties`` as ordered ``[key, value]`` pairs; ``_load_mqtt`` picks
+the MQTT client the bridge and the sink speak through.
 """
 
 from __future__ import annotations
@@ -38,7 +43,6 @@ import glob
 import json
 import os
 import time
-import zlib
 
 
 def _prop_pairs(raw) -> list[tuple[str, str]]:
@@ -98,28 +102,6 @@ def _scan_segments(spool_dir: str) -> list[tuple[int, int, str]]:
     return segs
 
 
-def _scan_segment_seqs(path: str) -> list[tuple[int, str]]:
-    """(seq, json_body) per line WITHOUT parsing the JSON — each line is
-    ``{seq:012d} {json}``, so consumers can filter on the cheap integer
-    prefix and json-parse only the lines they own."""
-    try:
-        with open(path) as f:
-            lines = f.read().splitlines()
-    except FileNotFoundError:
-        return []  # collected by a concurrent ack: all below the frontier
-    return [(int(line[:12]), line[13:]) for line in lines]
-
-
-def _claims_segment(path: str, partition_id: int, num_partitions: int) -> bool:
-    """Whole-file partition claim: each segment is read by exactly one
-    partition, so aggregate read cost over N partitions is ~1× the log —
-    the earlier per-seq interleave made every partition read EVERY file
-    (N× raw I/O, the first streaming bottleneck at 32+ partitions). The
-    key is the file name, which never changes once a segment is visible."""
-    name = os.path.basename(path).encode()
-    return zlib.crc32(name) % num_partitions == partition_id
-
-
 class SpoolPublisher:
     """Buffers messages and seals them into the spool, one segment per
     ``flush()``; ``close()`` and every ``segment_size``-th ``publish`` seal
@@ -151,14 +133,11 @@ class SpoolPublisher:
             "qos": qos,
             "retained": retained,
             # stored as ordered pairs so duplicate keys survive the spool
-            # (readers accept both this and the legacy dict form)
             "properties": _prop_pairs(properties),
             "payload_hex": payload.hex(),
             "timestamp": time.time(),
         }
-        # encoded now, outside the seal's lock, minus the opening brace:
-        # the seal prepends ``{"seq": n, `` once it knows n
-        self._buf.append(json.dumps(rec)[1:])
+        self._buf.append(json.dumps(rec))  # encoded outside the seal's lock
         if len(self._buf) >= self.segment_size:
             self.flush()
 
@@ -173,10 +152,7 @@ class SpoolPublisher:
             first = SpoolTransport(self.dir).latest_seq()
             last = first + len(bodies) - 1
             path = os.path.join(self.dir, f"{first:012d}-{last:012d}.seg")
-            _write_synced(path + ".tmp", "".join(
-                f'{seq:012d} {{"seq": {seq}, {body}\n'
-                for seq, body in enumerate(bodies, first)
-            ))
+            _write_synced(path + ".tmp", "\n".join(bodies) + "\n")
             os.rename(path + ".tmp", path)
             os.fsync(dir_fd)
         return first, last
@@ -218,53 +194,50 @@ class SpoolTransport:
         segs = _scan_segments(self.dir)
         return max(segs[-1][1] + 1 if segs else 0, self.frontier())
 
-    def _claimed_rows(
-        self, lo: int, end: int, partition_id: int, num_partitions: int
-    ) -> list[tuple[int, str]]:
-        """(seq, json_body) rows of [lo, end) owned by this partition, in
-        seq order (segments are disjoint and listed in order). Segments are
-        whole-file claimed — see ``_claims_segment``. A batch that spans
-        many segments spreads over all partitions; one small segment lands
-        on one partition, which is fine (3 messages don't need 32 tasks)."""
-        rows: list[tuple[int, str]] = []
-        for first, last, path in _scan_segments(self.dir):
-            if last < lo or first >= end:
-                continue
-            if num_partitions > 1 and not _claims_segment(
-                path, partition_id, num_partitions
-            ):
-                continue
-            rows.extend(
-                (seq, body)
-                for seq, body in _scan_segment_seqs(path)
-                if lo <= seq < end
-            )
-        return rows
-
     def read_range_columns(
         self, start: int, end: int, partition_id: int, num_partitions: int
     ) -> dict[str, list]:
-        """Messages in [start, end) claimed by this partition — the spool
+        """This partition's share of the window [start, end) — the spool
         analogue of the broker's shared-subscription load balancing
         (EMQXSourceReader.java:103) — as one dict of plain lists in seq
         order, the shape the Arrow source path builds its columns from.
-        ``timestamp`` is epoch microseconds."""
-        lo = max(start, self.frontier())
+        ``timestamp`` is epoch microseconds.
+
+        Partition i of N reads [start + span·i//N, start + span·(i+1)//N),
+        never below the frontier: equal shares that depend only on the
+        window, so every partition of a batch, replayed or not, agrees on
+        them. It opens only the segments that overlap its share; a segment
+        that straddles a cut is opened by both sides, so a batch opens at
+        most its segments plus N − 1 files."""
+        span = max(end - start, 0)
+        lo = max(start + span * partition_id // num_partitions, self.frontier())
+        hi = start + span * (partition_id + 1) // num_partitions
         cols: dict[str, list] = {
             "seq": [], "topic": [], "qos": [], "retained": [],
             "properties": [], "payload": [], "timestamp": [],
         }
-        if lo >= end:
+        if lo >= hi:
             return cols
-        for seq, body in self._claimed_rows(lo, end, partition_id, num_partitions):
-            rec = json.loads(body)
-            cols["seq"].append(seq)
-            cols["topic"].append(rec["topic"])
-            cols["qos"].append(rec["qos"])
-            cols["retained"].append(rec["retained"])
-            cols["properties"].append(_prop_pairs(rec["properties"]))
-            cols["payload"].append(bytes.fromhex(rec["payload_hex"]))
-            cols["timestamp"].append(int(rec["timestamp"] * 1_000_000))
+        for first, last, path in _scan_segments(self.dir):
+            if last < lo or first >= hi:
+                continue
+            try:
+                with open(path) as f:
+                    lines = f.read().splitlines()
+            except FileNotFoundError:
+                continue  # collected by a concurrent ack: all below the frontier
+            if len(lines) != last - first + 1:
+                raise ValueError(f"{path}: {len(lines)} lines, not {last - first + 1}")
+            a = max(lo, first)
+            for seq, line in enumerate(lines[a - first : hi - first], a):
+                rec = json.loads(line)
+                cols["seq"].append(seq)
+                cols["topic"].append(rec["topic"])
+                cols["qos"].append(rec["qos"])
+                cols["retained"].append(rec["retained"])
+                cols["properties"].append([tuple(p) for p in rec["properties"]])
+                cols["payload"].append(bytes.fromhex(rec["payload_hex"]))
+                cols["timestamp"].append(int(rec["timestamp"] * 1_000_000))
         return cols
 
     def ack_upto(self, end: int) -> int:

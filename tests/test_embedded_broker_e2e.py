@@ -229,9 +229,9 @@ def test_no_puback_before_its_segment_is_fsynced_and_renamed(
     for name in os.listdir(spool):
         if name.endswith(".seg"):
             path = os.path.abspath(os.path.join(spool, name))
-            with open(path) as f:  # lines are "{seq:012d} {json record}"
+            with open(path) as f:  # one JSON record per line
                 for line in f:
-                    rec = json.loads(line.split(" ", 1)[1])
+                    rec = json.loads(line)
                     segment_of[bytes.fromhex(rec["payload_hex"])] = path
     assert sorted(segment_of) == sent
     dir_ino = os.stat(spool).st_ino

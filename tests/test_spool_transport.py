@@ -149,12 +149,32 @@ def test_sink_partition_seals_segments(tmp_path):
     assert not [f for f in os.listdir(spool) if f.endswith(".seg")]
 
 
-def test_partition_claims_disjoint_and_complete(tmp_path):
-    """Every message in a window is delivered by exactly one of N
-    partitions, and each segment file is scanned by exactly one partition
-    (read amplification ~1x the log, not Nx)."""
+def _share(lo, hi, p, n_parts):
+    """Partition p's equal slice of the window [lo, hi)."""
+    span = max(hi - lo, 0)
+    return lo + span * p // n_parts, lo + span * (p + 1) // n_parts
+
+
+def _counting_segment_opens(tr):
+    """Patch the transport module's ``open`` to record every segment it
+    opens; returns (patcher, list of opened paths)."""
     from unittest import mock
 
+    opened = []
+
+    def counting(path, *a, **kw):
+        if path.endswith(".seg"):
+            opened.append(path)
+        return open(path, *a, **kw)
+
+    return mock.patch.object(tr, "open", counting, create=True), opened
+
+
+def test_partition_claims_disjoint_and_complete(tmp_path):
+    """Every message in a window is delivered by exactly one of N
+    partitions, each partition reads exactly its equal slice of the window,
+    and a batch opens at most its segments plus N - 1 files (a segment is
+    opened twice only where a cut between two slices falls inside it)."""
     import flink_emqx_connector_spark.sources.transport as tr
 
     spool = str(tmp_path / "spool")
@@ -166,30 +186,30 @@ def test_partition_claims_disjoint_and_complete(tmp_path):
     end = t.latest_seq()
     n_parts = 8
 
-    scans = []
-    real = tr._scan_segment_seqs
-
-    def counting(path):
-        scans.append(path)
-        return real(path)
-
+    patcher, opened = _counting_segment_opens(tr)
     got = []
-    with mock.patch.object(tr, "_scan_segment_seqs", counting):
+    with patcher:
         for p in range(n_parts):
-            got += _payloads(t, 0, end, p, n_parts)
+            cols = t.read_range_columns(0, end, p, n_parts)
+            assert cols["seq"] == list(range(*_share(0, end, p, n_parts)))
+            got += cols["payload"]
     assert sorted(got) == sorted(str(i).encode() for i in range(200))
     n_files = len([f for f in os.listdir(spool) if f.endswith(".seg")])
-    # whole-file claims: each file scanned once across ALL partitions
-    assert len(scans) == n_files, (len(scans), n_files)
+    assert len(opened) <= n_files + n_parts - 1, (len(opened), n_files)
 
 
 def test_claims_property_random_schedules():
     """Property: for ANY publisher schedule (message count, segment size,
-    multiple publishers, an unsealed tail) and ANY partition count, the
-    partition claims are a disjoint complete cover of every batch window."""
+    multiple publishers, an unsealed tail), ANY window, ANY acked frontier
+    and ANY partition count, each partition reads exactly its equal slice
+    of the window above the frontier, so the partitions are a disjoint
+    complete cover of it, and the batch opens at most its segments plus
+    N - 1 files."""
     import tempfile
 
     from hypothesis import given, settings, strategies as st
+
+    import flink_emqx_connector_spark.sources.transport as tr
 
     @settings(max_examples=25, deadline=None)
     @given(
@@ -201,8 +221,9 @@ def test_claims_property_random_schedules():
             st.integers(min_value=0, max_value=10),
             st.integers(min_value=0, max_value=60),
         ),
+        acked=st.integers(min_value=0, max_value=30),
     )
-    def check(seg_size, counts, n_parts, seal_last, window):
+    def check(seg_size, counts, n_parts, seal_last, window, acked):
         with tempfile.TemporaryDirectory() as d:
             spool = str(d) + "/s"
             total = 0
@@ -214,14 +235,59 @@ def test_claims_property_random_schedules():
                 if seal_last or pi < len(counts) - 1:
                     pub.close()
             t = SpoolTransport(spool)
+            frontier = min(acked, t.latest_seq())
+            t.ack_upto(frontier)
             lo, span = window
             hi = min(lo + span, t.latest_seq())
+            n_files = len([f for f in os.listdir(spool) if f.endswith(".seg")])
+            patcher, opened = _counting_segment_opens(tr)
             seen = []
-            for p in range(n_parts):
-                seen += _seqs(t, lo, hi, p, n_parts)
-            assert sorted(seen) == list(range(min(lo, hi), hi))
+            with patcher:
+                for p in range(n_parts):
+                    a, b = _share(lo, hi, p, n_parts)
+                    part = _seqs(t, lo, hi, p, n_parts)
+                    assert part == list(range(max(a, frontier), b))
+                    seen += part
+            assert sorted(seen) == list(range(max(lo, frontier), hi))
+            assert len(opened) <= n_files + n_parts - 1, (len(opened), n_files)
 
     check()
+
+
+def test_segment_with_wrong_line_count_raises(tmp_path):
+    """A segment's name gives the seq of every line, so one whose line
+    count differs from its name's range must fail the read, never shift
+    seqs onto the wrong messages."""
+    spool = str(tmp_path / "spool")
+    pub = SpoolPublisher(spool)
+    for i in range(3):
+        pub.publish("t/1", b"%d" % i)
+    first, last = pub.flush()
+    path = os.path.join(spool, f"{first:012d}-{last:012d}.seg")
+    with open(path) as f:
+        lines = f.readlines()
+    with open(path, "w") as f:
+        f.writelines(lines[:2])
+    t = SpoolTransport(spool)
+    with pytest.raises(ValueError, match="2 lines, not 3"):
+        t.read_range_columns(0, 3, 0, 1)
+
+
+def test_earlier_prefixed_line_format_raises(tmp_path):
+    """A segment in the earlier ``{seq:012d} {json}`` line form (written by
+    a previous version) fails the read instead of being misparsed."""
+    import json
+
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    rec = {"seq": 0, "topic": "t/1", "qos": 1, "retained": False,
+           "properties": [], "payload_hex": b"x".hex(), "timestamp": 1.0}
+    with open(os.path.join(spool, "000000000000-000000000000.seg"), "w") as f:
+        f.write(f"{0:012d} {json.dumps(rec)}\n")
+    t = SpoolTransport(spool)
+    assert t.latest_seq() == 1
+    with pytest.raises(ValueError):
+        t.read_range_columns(0, 1, 0, 1)
 
 
 def test_concurrent_seals_and_acks_lose_nothing(tmp_path):
