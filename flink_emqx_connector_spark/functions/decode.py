@@ -12,7 +12,7 @@ improvement the survey calls for (SURVEY.md §2 S9).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -37,28 +37,3 @@ def decode_json(
 def decode_csv(payload: Column | str, schema: str, charset: str = "UTF-8") -> Column:
     """``byte[] → struct`` via ``from_csv`` (DDL schema string)."""
     return F.from_csv(decode_string(payload, charset), F.lit(schema))
-
-
-def with_decoded(
-    df: DataFrame,
-    schema: T.StructType | str | None = None,
-    payload_col: str = "payload",
-    out_col: str = "decoded",
-) -> DataFrame:
-    """Attach a decoded column: string when ``schema is None``, else JSON."""
-    dec = decode_string(payload_col) if schema is None else decode_json(payload_col, schema)
-    return df.withColumn(out_col, dec)
-
-
-def split_dead_letter(
-    df: DataFrame, decoded_col: str = "decoded"
-) -> tuple[DataFrame, DataFrame]:
-    """Split decoded stream into (good, dead-letter) DataFrames.
-
-    The reference logs-and-drops malformed messages
-    (``EMQXSourceReader.java:80-82``); we keep them addressable. Both halves
-    share one scan — Catalyst reuses the exchange under AQE.
-    """
-    good = df.filter(F.col(decoded_col).isNotNull())
-    dead = df.filter(F.col(decoded_col).isNull())
-    return good, dead

@@ -22,8 +22,6 @@ pipeline breaker costs more than it saves.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 
 from pyspark.sql import Column, DataFrame
@@ -36,13 +34,6 @@ def _dot(a: Column, b: Column) -> Column:
 
 def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-
-
-def cosine_to_query(vec_col: Column, query: list[float]) -> Column:
-    """Cosine similarity of an array column to a constant query vector."""
-    q = F.array(*[F.lit(float(x)) for x in query])
-    v = vec_col.cast("array<double>")
-    return _dot(v, q) / (_norm(v) * _norm(q))
 
 
 def cosine_scores_to_query(
@@ -219,15 +210,6 @@ def rp_lsh_topk(
     bucketed = rp_lsh_buckets(emb, n_planes, len(query), seed, vec_col)
     cand = bucketed.filter(F.col("bucket").isin(probes))
     return cosine_topk(cand, query, k, id_col, vec_col, exclude_id)
-
-
-def deterministic_query_vector(dim: int = 64, seed: str = "ann-query") -> list[float]:
-    """A fixed query vector derived from sha256 — stable across runs/hosts."""
-    vals = []
-    for i in range(dim):
-        d = hashlib.sha256(f"{seed}-{i}".encode()).digest()
-        vals.append(int.from_bytes(d[:4], "big") / 2**31 - 1.0)
-    return vals
 
 
 def label_centroid_arrays(

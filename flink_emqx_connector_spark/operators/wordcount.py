@@ -41,10 +41,3 @@ def word_count(messages: DataFrame, payload_is_text: bool = True) -> DataFrame:
         F.explode(F.split(decode_string("payload"), r"\s+")).alias("word")
     ).filter(F.col("word") != "")
     return words.groupBy("word").agg(F.count("*").alias("cnt"))
-
-
-def word_count_streaming(messages: DataFrame):
-    """Streaming variant: returns the aggregated DataFrame; caller attaches
-    ``writeStream.outputMode("update")`` — per-micro-batch updated rows,
-    the Spark analogue of Flink's per-record rolling emission."""
-    return word_count(messages)

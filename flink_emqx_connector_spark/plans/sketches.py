@@ -54,13 +54,6 @@ def _t(spark, sf_dir, name):
     return load_table(spark, sf_dir, name)
 
 
-def _h32(col, salt: str):
-    """32-bit md5-derived hash of a string column (engine-portable)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), col)), 1, 8), 16, 10
-    ).cast("bigint")
-
-
 def _h32_sql(expr: str, salt: str) -> str:
     return (
         f"CAST(('0x' || substr(md5('{salt}' || ({expr})), 1, 8)) AS UBIGINT)"

@@ -173,20 +173,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load the driver-generated parquet tables from ``sf_dir`` as a dict."""
-    all_names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    return {n: load_table(spark, sf_dir, n) for n in all_names}

@@ -41,10 +41,9 @@ def _publish_partition(rows, transport: str, spool_dir: str, host: str, port: in
         finally:
             pub.close()  # seal: nothing is visible to readers before this
     else:
-        from ..sources.transport import _load_mqtt
+        from ..sources.mqtt_wire import CallbackAPIVersion, Client, MQTTv5
 
-        mqtt, _pkt, _props = _load_mqtt()
-        cli = mqtt.Client(mqtt.CallbackAPIVersion.VERSION2, protocol=mqtt.MQTTv5)
+        cli = Client(CallbackAPIVersion.VERSION2, protocol=MQTTv5)
         cli.connect(host, port)
         cli.loop_start()
         for r in rows:

@@ -46,8 +46,8 @@ from __future__ import annotations
 import threading
 import time
 
-from .mqtt_wire import _CONNACK_PERMANENT
-from .transport import SpoolPublisher, _load_mqtt
+from . import mqtt_wire
+from .transport import SpoolPublisher
 
 
 class MqttSpoolBridge:
@@ -127,14 +127,13 @@ class MqttSpoolBridge:
         self._watchdog.start()
 
     def _spawn_member(self, i: int):
-        mqtt, PacketTypes, Properties = _load_mqtt()
-        cli = mqtt.Client(
-            mqtt.CallbackAPIVersion.VERSION2,
+        cli = mqtt_wire.Client(
+            mqtt_wire.CallbackAPIVersion.VERSION2,
             client_id=f"{self._clientid}-bridge-{i}",
-            protocol=mqtt.MQTTv5,
+            protocol=mqtt_wire.MQTTv5,
             manual_ack=True,
         )
-        props = Properties(PacketTypes.CONNECT)
+        props = mqtt_wire.Properties(mqtt_wire.PacketTypes.CONNECT)
         props.SessionExpiryInterval = self._session_expiry
         status = (
             f"{self._status_topic}/{self._clientid}-bridge-{i}"
@@ -147,7 +146,7 @@ class MqttSpoolBridge:
             cli.will_set(status, b"dead", qos=1, retain=True)
 
         def on_connect(client, userdata, flags, reason, properties=None):
-            if getattr(reason, "value", reason) != 0:
+            if reason != 0:
                 return  # CONNACK refusal — never subscribe into it
             if status:
                 # overwrite any stale "dead"/"offline" record — a watchdog
@@ -163,35 +162,10 @@ class MqttSpoolBridge:
                 self._queue.append((client, msg))
                 self._queued.notify()
 
-        def on_disconnect(client, userdata, flags, reason, properties=None):
-            # real-paho leg: mark takeover so the watchdog cedes (the
-            # embedded double sets .superseded itself on 0x8E). Must ALSO
-            # stop the client: with reconnect_delay_set + loop_start,
-            # stock paho would otherwise auto-reconnect with the same
-            # clientid and clean_start=False, retaking the session and
-            # ping-ponging with the new owner — exactly the duplicate
-            # storm the cede policy exists to prevent.
-            if getattr(reason, "value", reason) == 0x8E:
-                client.superseded = True
-                try:
-                    client.disconnect()
-                except Exception:
-                    pass  # socket already gone — superseded flag still cedes
-
         cli.on_connect = on_connect
         cli.on_message = on_message
-        cli.on_disconnect = on_disconnect
         auth_method, auth_secret = self._auth
         if auth_method is not None:
-            # the embedded MQTT 5 client implements the AUTH exchange; a
-            # real paho build cannot speak it — fail loud rather than
-            # connect unauthenticated into a CONNACK 0x8C refusal
-            if not hasattr(cli, "enhanced_auth"):
-                raise ValueError(
-                    "auth_method set but this MQTT client has no "
-                    "enhanced-auth support (pip paho-mqtt lacks the "
-                    "AUTH exchange; the embedded client provides it)"
-                )
             cli.enhanced_auth(auth_method, auth_secret or b"")
         cli._graft_status = status  # for graceful-departure announcements
         cli.reconnect_delay_set(min_delay=1, max_delay=10)
@@ -222,10 +196,9 @@ class MqttSpoolBridge:
                 for _cli, msg in group:
                     # ordered (key, value) pairs — duplicate keys preserved
                     # end-to-end (EMQXMessage.java:9 Mqtt5UserProperties)
-                    props = getattr(msg, "properties", None)
                     self._pub.publish(
                         msg.topic, bytes(msg.payload), qos=msg.qos,
-                        properties=list(getattr(props, "UserProperty", []) or []),
+                        properties=msg.properties.UserProperty,
                     )
                 t0 = time.perf_counter()
                 self._pub.flush()
@@ -269,8 +242,8 @@ class MqttSpoolBridge:
         """The CONNACK codes when EVERY member was permanently refused
         (bad clientid, credentials or auth method; the members cede and
         nothing will ever arrive), else []."""
-        codes = [getattr(cli, "connect_refused", None) for cli in self._clients]
-        if codes and all(c in _CONNACK_PERMANENT for c in codes):
+        codes = [cli.connect_refused for cli in self._clients]
+        if codes and all(c in mqtt_wire._CONNACK_PERMANENT for c in codes):
             return codes
         return []
 
@@ -278,17 +251,16 @@ class MqttSpoolBridge:
     def _member_dead(cli) -> bool:
         """True when the member's network loop is permanently gone (the
         auto-reconnect loop covers transient failures internally)."""
-        th = getattr(cli, "_thread", None)
-        return th is not None and not th.is_alive()
+        return cli._thread is not None and not cli._thread.is_alive()
 
     def _watch(self) -> None:
         while not self._stopped.wait(self.WATCHDOG_INTERVAL):
             for i, cli in enumerate(self._clients):
                 if self._stopped.is_set():
                     return
-                if getattr(cli, "superseded", False):
+                if cli.superseded:
                     continue  # new owner holds the clientid — cede
-                if getattr(cli, "connect_refused", None) is not None:
+                if cli.connect_refused is not None:
                     # permanent CONNACK refusal (bad clientid/credentials/
                     # not authorized) stopped the loop — respawning would
                     # storm doomed CONNECTs; transient refusals never kill
@@ -363,18 +335,15 @@ class MqttSpoolBridge:
         """Graceful departure: a clean DISCONNECT discards the will, so
         the last-known state is published explicitly (retained) first —
         monitors distinguish planned 'offline' from crashed 'dead'."""
-        status = getattr(cli, "_graft_status", None)
-        if status:
+        if cli._graft_status:
             try:
-                info = cli.publish(status, b"offline", qos=1, retain=True)
+                info = cli.publish(
+                    cli._graft_status, b"offline", qos=1, retain=True
+                )
                 # Wait for the PUBACK before the caller's clean
-                # DISCONNECT: with real paho the publish is queued to an
-                # async network loop, and disconnect() right behind it
-                # drops the frame — leaving a stale retained 'online' as
-                # the topic's last-known state with no will to correct
-                # it (clean disconnect discards the will). The embedded
-                # client only worked by accident (synchronous socket
-                # write). ADVICE r10 #2.
+                # DISCONNECT, so 'offline' is on the broker before the
+                # connection goes: a clean DISCONNECT discards the will,
+                # and nothing would correct a stale retained 'online'.
                 info.wait_for_publish(timeout=1.0)
             except Exception:
                 pass  # dead socket: the retained WILL tells the truth

@@ -1,15 +1,15 @@
-"""Minimal MQTT 5 wire implementation: codec, embedded broker, and a
-paho-interface-compatible client — pure stdlib, real TCP sockets.
+"""Minimal MQTT 5 wire implementation: codec, embedded broker, and the
+engine's MQTT client — pure stdlib, real TCP sockets.
 
-Written from the public OASIS MQTT 5.0 specification. Purpose: the
-reference's whole test suite is live-broker integration
-(``EMQXSourceIntegrationTest.java:63-364``, Testcontainers EMQX 5.10.0);
-this environment has neither docker nor paho-mqtt, so the embedded broker
-plus this client let the same four scenarios run end-to-end over real
-network sockets with no fake-client shims. The bridge and the sink use
-real paho when it is installed and fall back to :class:`Client` below
-(same callback surface) when it isn't — either way the protocol on the
-wire is MQTT 5.
+Written from the public OASIS MQTT 5.0 specification. :class:`Client` is
+the one MQTT client the engine speaks through: the bridge and the sink
+use it against the embedded broker and against a real EMQX alike (its
+API keeps the paho-mqtt shape: VERSION2 callbacks, ``Properties``,
+``PacketTypes``). The reference's whole test suite is live-broker
+integration (``EMQXSourceIntegrationTest.java:63-364``, Testcontainers
+EMQX 5.10.0); the embedded broker plus this client let the same four
+scenarios run end-to-end over real network sockets, with no Docker and
+no fake-client shims.
 
 Scope — exactly the protocol surface the connector semantics need
 (``EMQXSourceReader.java:92-117,168-202``):
@@ -1813,6 +1813,8 @@ class Client:
         self._clean_start = True
         self._keepalive = 30
         self._session_expiry: int | None = None
+        # bare clients (tests, load generators) retry fast; the bridge
+        # sets its own bounds through reconnect_delay_set
         self._min_delay, self._max_delay = 0.05, 1.0
         self._pid = 0
         self._preader: _PacketReader | None = None
@@ -1878,9 +1880,11 @@ class Client:
     # paho surface ---------------------------------------------------------
 
     def reconnect_delay_set(self, min_delay=1, max_delay=10) -> None:
-        # floors scaled down: an in-process broker restarts in ms, not s
-        self._min_delay = min(float(min_delay), 0.05)
-        self._max_delay = min(float(max_delay), 1.0)
+        """Backoff bounds (seconds) between reconnect attempts: the first
+        retry waits ``min_delay``, each failure doubles it up to
+        ``max_delay``."""
+        self._min_delay = float(min_delay)
+        self._max_delay = float(max_delay)
 
     def connect(self, host, port, clean_start=True, properties=None, keepalive=30):
         self._store_params(host, port, clean_start, properties, keepalive)
@@ -2473,9 +2477,9 @@ class Client:
             #  - 0x8E Session taken over: ANOTHER connection owns this
             #    clientid now — reconnecting would take it back and
             #    ping-pong (round-2's measured 34× duplicate storm), so
-            #    the reconnect loop STOPS. This deliberately diverges
-            #    from stock paho (which blindly reconnects); the paho
-            #    transport applies the same policy via on_disconnect.
+            #    the reconnect loop STOPS and ``superseded`` tells the
+            #    bridge's watchdog to cede. This deliberately diverges
+            #    from stock paho, which blindly reconnects.
             #  - anything else (server busy 0x89, use another server
             #    0x9C, ...): transient per EMQX semantics — tear down and
             #    let the loop reconnect with backoff.

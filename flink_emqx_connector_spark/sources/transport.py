@@ -31,8 +31,7 @@ writer makes visible later; a seq is never reused, also after a crash
 (``FRONTIER`` is made durable before the segments below it are unlinked).
 
 Records are ``{topic, qos, retained, properties, payload_hex, timestamp}``
-with ``properties`` as ordered ``[key, value]`` pairs; ``_load_mqtt`` picks
-the MQTT client the bridge and the sink speak through.
+with ``properties`` as ordered ``[key, value]`` pairs.
 """
 
 from __future__ import annotations
@@ -263,22 +262,3 @@ class SpoolTransport:
                     n += 1
         return n
 
-
-# --------------------------------------------------------------------------
-# MQTT client (bridge and sink)
-# --------------------------------------------------------------------------
-
-
-def _load_mqtt():
-    """paho-mqtt when installed, else the embedded MQTT 5 client
-    (``mqtt_wire.Client``, same callback surface, real sockets)."""
-    try:
-        import paho.mqtt.client as mqtt
-        from paho.mqtt.packettypes import PacketTypes
-        from paho.mqtt.properties import Properties
-
-        return mqtt, PacketTypes, Properties
-    except ImportError:
-        from . import mqtt_wire
-
-        return mqtt_wire, mqtt_wire.PacketTypes, mqtt_wire.Properties

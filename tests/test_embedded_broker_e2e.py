@@ -419,14 +419,24 @@ def test_message_delivery_shared_group(broker, tmp_path):
         bridge.stop()
 
 
-def test_graceful_stop_then_restart_no_redelivery(broker, tmp_path):
+def test_graceful_stop_then_restart_no_redelivery(broker, tmp_path, monkeypatch):
     """stopWithSavepoint (reference :172-217): append and ack 10, stop the
     bridge, restart it with the same clientid + clean_start=False —
     session present, nothing redelivered; new messages still flow."""
+    subscribes = []
+    real_subscribe = Client.subscribe
+
+    def recording_subscribe(self, topic, qos=0, **kw):
+        subscribes.append((topic, qos))
+        return real_subscribe(self, topic, qos, **kw)
+
+    monkeypatch.setattr(Client, "subscribe", recording_subscribe)
     spool = str(tmp_path / "spool")
     cid = "c-stop-bridge-0"
     bridge = _bridge(broker.port, "c-stop", spool, group="gstop")
     assert _wait(lambda: _subscribed(broker, cid))
+    # the fresh session subscribes once, to the shared filter at its QoS
+    assert subscribes == [("$share/gstop/t/#", 1)]
     pub = _publisher(broker.port)
     for i in range(10):
         pub.publish("t/1", str(i).encode(), qos=1).wait_for_publish()
@@ -444,6 +454,9 @@ def test_graceful_stop_then_restart_no_redelivery(broker, tmp_path):
         assert st.latest_seq() == 10
         pub.publish("t/1", b"after", qos=1).wait_for_publish()
         assert _wait(lambda: st.latest_seq() == 11)
+        # the CONNECT's clean_start=False kept the subscription, so the
+        # resumed session (session_present) sent no second SUBSCRIBE
+        assert subscribes == [("$share/gstop/t/#", 1)]
         assert _spool_payloads(spool) == [str(i).encode() for i in range(10)] + [
             b"after"
         ]
@@ -520,6 +533,7 @@ def test_broker_offline_at_start(tmp_path):
     broker = None
     try:
         assert SpoolTransport(spool).latest_seq() == 0
+        assert bridge.refused() == []  # a broker that is down is not a refusal
         broker = EmbeddedBroker(port=port).start()
         cid = "c-off-bridge-0"
         assert _wait(lambda: _subscribed(broker, cid), timeout=10)
@@ -1239,6 +1253,39 @@ def test_connect_then_garbage_is_backoff_paced():
                 c.close()
             except OSError:
                 pass
+
+
+def test_reconnect_delay_set_is_honoured():
+    """The delays passed to ``reconnect_delay_set`` pace the retries as
+    given: the bridge's 1-10 s backoff must not shrink to a sub-second
+    reconnect storm against a broker that keeps dropping it."""
+    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
+    srv.bind(("127.0.0.1", 0))
+    srv.listen(16)
+    port = srv.getsockname()[1]
+    accepts = []
+
+    def closing_broker():
+        while True:
+            try:
+                conn, _ = srv.accept()
+            except OSError:
+                return
+            accepts.append(time.monotonic())
+            conn.close()
+
+    threading.Thread(target=closing_broker, daemon=True).start()
+    cli = Client(CallbackAPIVersion.VERSION2, client_id="slow-cli", protocol=MQTTv5)
+    cli.reconnect_delay_set(min_delay=1, max_delay=10)
+    cli.connect_async("127.0.0.1", port)
+    cli.loop_start()
+    try:
+        time.sleep(2.5)
+        # attempts at ~0 s, ~1 s and ~3 s: two fit in 2.5 s
+        assert 1 <= len(accepts) <= 3, accepts
+    finally:
+        cli.loop_stop()
+        srv.close()
 
 
 def test_bridge_reconnect_replays_backlog_as_one_prefix_aligned_block(tmp_path):

@@ -124,9 +124,6 @@ def _crash(bridge):
     bridge._watchdog.join()
     for cli in bridge._clients:
         cli.loop_stop()
-        sock = cli.socket() if hasattr(cli, "socket") else None
-        if sock is not None:  # paho keeps the socket open after loop_stop
-            sock.close()
     with bridge._queued:  # the flusher exits without sealing the queue
         bridge._queue.clear()
         bridge._queued.notify()

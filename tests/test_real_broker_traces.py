@@ -2,7 +2,7 @@
 
 The realbroker suite (tests/test_real_broker.py) has never executed —
 no Docker daemon exists in this environment — so the broker double is
-the only thing the paho leg has ever talked to. This module narrows
+the only broker the MQTT client has ever talked to. This module narrows
 that gap from the other side (VERDICT r7 item 3): scripted servers
 replay the frame sequences a real EMQX emits in the scenarios the
 double cannot naturally produce, hand-authored from the MQTT 5 spec

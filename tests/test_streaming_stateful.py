@@ -191,7 +191,7 @@ def _protobuf_available() -> bool:
     not _protobuf_available(),
     reason="transformWithStateInPandas's driver worker requires "
     "google.protobuf (not shipped in this container); the operator is "
-    "import-gated the same way paho-mqtt is",
+    "import-gated on it",
 )
 def test_rolling_sum_transform_with_state(spark, tmp_path):
     """transformWithStateInPandas (Spark 4 StatefulProcessor + RocksDB
