@@ -746,40 +746,6 @@ def _verify_candidates(
     )
 
 
-#: Relative standard error of the MinHash dup-ratio probe's HLL sketch
-#: (Spark's default, spelled out because the probe's cut depends on it).
-_PROBE_RSD = 0.05
-
-
-def _dup_heavy(docs: DataFrame, text_col: str) -> bool:
-    """``minhash_lsh_pairs``' dup-ratio probe: whether ``docs`` has clearly
-    fewer distinct texts than rows. ONE corpus scan feeding an HLL sketch,
-    no materialization.
-
-    The branch it picks only selects a faster plan — both branches are
-    output-identical (identical texts have identical signatures, collide
-    in every band, screen at 1 and verify at exactly 1.0; the oracle
-    always canonicalizes), so an approximate count is safe. The r13 shape
-    paid md5 over the whole text column PLUS a full (doc, fp)
-    localCheckpoint PLUS an exact count_distinct shuffle before making the
-    same decision — on an already-distinct corpus (the common case) all
-    of it thrown away (driver-measured 3.4 s → 19.8 s). It is probed on
-    raw docs, not on the ≥n-words filtered frame: that filter would
-    evaluate split(text) across the whole corpus inside the probe scan,
-    and the distinct ratio of the raw corpus is the same signal.
-
-    The cut sits 3 relative standard errors below 1, so a corpus of
-    distinct texts reads as distinct: the generated corpus's 1,500 texts,
-    1,492 of them distinct, read 0.917–0.949 on some seeds, and a cut at
-    0.95 sent them down the dup-heavy branch (+0.3 s, same output).
-    """
-    probe = docs.agg(
-        F.count("*").alias("n"),
-        F.approx_count_distinct(text_col, rsd=_PROBE_RSD).alias("nd"),
-    ).collect()[0]
-    return (probe["nd"] or 0) < (1 - 3 * _PROBE_RSD) * (probe["n"] or 0)
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
@@ -794,27 +760,22 @@ def minhash_lsh_pairs(
 
     rows-per-band r = num_hashes/bands; a pair with Jaccard s collides in
     ≥1 band with prob 1-(1-s^r)^bands (r=2, b=16 → 0.99 at s=0.5). The
-    band shuffle moves |distinct texts|·bands short rows — this is the
-    100 TB path where the exact inverted index (``ngram_jaccard_pairs``)
-    gets too dense. Candidates are verified with exact Jaccard, so
-    precision is 1.0 and only recall is probabilistic. Two probabilistic
-    stages compose the recall at s = threshold: band collision
+    band shuffle moves |docs|·bands short rows — this is the 100 TB path
+    where the exact inverted index (``ngram_jaccard_pairs``) gets too
+    dense. Candidates are verified with exact Jaccard, so precision is
+    1.0 and only recall is probabilistic. Two probabilistic stages
+    compose the recall at s = threshold: band collision
     (1-(1-s^r)^b ≈ 0.99) × the verify stage's estimated-Jaccard screen
     (≈ 0.99 at its 2.5σ floor, see ``_verify_candidates``) ≈ 0.98;
     pairs above the threshold survive both with higher probability.
+    Exact copies share every band key, pass the screen at agreement 1
+    and verify at exactly 1.0, so every copy pair is found.
 
-    **Exact-dup canonicalization first**: real corpora are often heavily
-    duplicated (this repo's synthetic one is not: ~0.5% exact copies), and LSH
-    over raw docs puts every copy of a text in the same buckets — pair
-    blowup quadratic in copy count (367k candidates at sf0.1, ~0.1%
-    precision). So: group docs by content digest, run the whole LSH
-    pipeline over one representative per distinct text, then expand pairs
-    back over group members — identical texts have identical shingle sets,
-    so cross-group member pairs inherit the representatives' exact
-    Jaccard, and within-group pairs are exactly 1.0. Output is identical
-    to LSH-over-raw-docs (with strictly better recall: jac-1.0 pairs are
-    now found with probability 1), while the quadratic stages see only
-    distinct texts.
+    One plan for every corpus, skew included: a bucket's pairs come from
+    a shuffle self-join of the (band, bucket) rows, which AQE's skew
+    split can cut at map-output boundaries. A hot template's m copies
+    fill one bucket per band, so that join emits bands·C(m,2) rows before
+    the ``distinct`` — spread over tasks, never built in one.
 
     Docs whose text has < n words produce no shingles and cannot pair
     (Jaccard on two empty sets is 0/0): excluded up front.
@@ -823,59 +784,19 @@ def minhash_lsh_pairs(
     a composition (e.g. ``dedup_lsh_recall_eval`` runs this plan AND the
     exact-Jaccard plan over one persisted shingle frame) — signatures are
     built from it instead of re-tokenizing the corpus; results identical
-    (empty/null shingle arrays explode away, and the dup-heavy branch
-    rep-filters the frame by an id join exactly like the docs side).
+    (empty/null shingle arrays explode away).
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    spark = docs.sparkSession
 
-    base = docs.select(
+    docs = docs.select(
         F.col(id_col).alias("doc"), F.col(text_col).alias(text_col)
     ).filter(F.size(F.split(F.col(text_col), " ")) >= F.lit(n))
-    # probed on raw docs, not `base` (see ``_dup_heavy``)
-    groups = None
-    doc_fp = None
-    if _dup_heavy(docs, text_col):
-        # Dup-heavy branch: one corpus text scan produces the 24-byte
-        # (doc, fp) digest proxy, checkpointed EAGERLY (broadcast-thread
-        # deadlock rule, OPTIMIZATION_r13.md); the rep groups AND the
-        # within-group pair expansion below read the checkpoint instead of
-        # re-hashing the text column (the pre-r13 shape paid TWO more md5
-        # corpus scans in the within self-join; guide §8: decide on
-        # lightweight proxies, touch the payload once). The checkpoint
-        # preserves the corpus-scan partitioning, so the hot-fp skew-split
-        # property of the within-group join is unchanged (pinned by
-        # tests/test_dedup.py::test_minhash_within_group_expansion_is_skew_splittable).
-        doc_fp = base.select(
-            "doc", F.md5(F.encode(text_col, "UTF-8")).alias("fp")
-        ).localCheckpoint()
-        groups = (
-            doc_fp.groupBy("fp")
-            .agg(F.min("doc").alias("rep"), F.collect_list("doc").alias("members"))
-            # consumed twice below (rep filter, 2-sided member expansion);
-            # one row per distinct text — same eager-driver-step pattern
-            # as connected_components
-            .localCheckpoint()
-        )
-        rep_ids = groups.select(F.col("rep").alias("doc"))
-        # no broadcast hint: |distinct texts| is data-proportional — AQE
-        # broadcasts when it is actually small, shuffles when it isn't
-        docs = base.join(rep_ids, "doc")
-        if shingles is not None:
-            shingles = shingles.join(rep_ids, "doc")
-    else:
-        docs = base
     id_col = "doc"
-    # Candidate generation: one shuffle of (band, bucket-hash, doc) short
-    # rows, grouped per bucket, pairs exploded from the collected set.
     # The signature table is localCheckpoint'ed so the whole pipeline
     # computes it exactly ONCE (bucketing + the estimated-Jaccard filter
     # below both consume it); the earlier explicit persist leaked a
-    # CacheManager entry for the session lifetime. Bucket membership lists
-    # are per-distinct-text thanks to the canonicalization above; an
-    # adversarial templated corpus still collides heavily at r rows/band —
-    # which the estimator filter absorbs.
+    # CacheManager entry for the session lifetime.
     sigs = minhash_signatures(
         docs, num_hashes, n, text_col, id_col, shingles=shingles
     ).localCheckpoint()
@@ -904,68 +825,26 @@ def minhash_lsh_pairs(
     buckets = sigs.select("doc", F.explode(band_structs).alias("b")).select(
         "doc", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
     )
+    # Candidate generation: a self-join of the bucket rows on (band, bh).
+    # The join streams the short (band, bh, doc) rows from every mapper,
+    # so AQE can split a hot bucket across tasks. Collecting a bucket's
+    # docs into one row and exploding it would build all m² pairs in the
+    # one task that owns that row (pinned by
+    # tests/test_dedup.py::test_minhash_candidate_join_is_skew_splittable).
+    # NOT checkpointed: the verify stage consumes the raw candidate list
+    # exactly once (the screening join) and checkpoints only the much
+    # smaller screened output.
+    ba = buckets.select("band", "bh", F.col("doc").alias("doc_a"))
+    bb = buckets.select("band", "bh", F.col("doc").alias("doc_b"))
     cand = (
-        buckets.groupBy("band", "bh")
-        .agg(F.collect_set("doc").alias("ds"))
-        .filter(F.size("ds") > 1)
-        .select(F.explode("ds").alias("doc_a"), "ds")
-        .select("doc_a", F.explode("ds").alias("doc_b"))
+        ba.join(bb, ["band", "bh"])
         .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
         .distinct()
-        # NOT checkpointed: the verify stage consumes the raw candidate
-        # list exactly once (the screening join) and checkpoints only the
-        # much smaller screened output — materializing 100k+ raw
-        # band-collision pairs here would be pure overhead.
     )
-    # The verify stage filters by candidate id anyway (cand_ids ⊆ reps), so
-    # hand it `base` rather than the canonicalized `base ⋈ rep_ids`: one
-    # id-join over the corpus scan instead of two (identical row set).
-    rep_pairs = _verify_candidates(
-        base, cand, sigs, threshold, num_hashes, n, text_col, id_col
+    return _verify_candidates(
+        docs, cand, sigs, threshold, num_hashes, n, text_col, id_col
     )
-    if groups is None:  # corpus already distinct — nothing to expand
-        return rep_pairs
-    # Expand representative pairs back over exact-dup group members.
-    mem = groups.select(F.col("rep"), F.explode("members").alias("m"))
-    cross = (
-        rep_pairs.join(
-            mem.select(F.col("rep").alias("doc_a"), F.col("m").alias("ma")), "doc_a"
-        )
-        .join(
-            mem.select(F.col("rep").alias("doc_b"), F.col("m").alias("mb")), "doc_b"
-        )
-        .select(
-            F.least("ma", "mb").alias("doc_a"),
-            F.greatest("ma", "mb").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    # Within-group (jaccard-1.0) pairs via a self-join of the PRE-group
-    # (doc, fp) rows on the digest key, NOT a nested explode of the
-    # collected member array: a hot-template corpus puts 10⁴⁺ members in
-    # ONE group row, and exploding that row twice generates the whole
-    # C(m,2) block in a single task (measured: a 25k-member group = 312M
-    # pairs through one straggler). Joining the pre-group rows matters
-    # twice over:
-    #  - memory: the join streams short (fp, doc) rows instead of
-    #    materializing the full members array per output row;
-    #  - parallelism: AQE's skew split can only cut a reduce partition at
-    #    MAP-OUTPUT boundaries. Exploding the one collected group row
-    #    yields a single-mapper block (unsplittable); the checkpointed
-    #    doc_fp rows keep the corpus-scan partitioning, so the hot fp's
-    #    reduce block has as many split points as scan partitions and the
-    #    C(m,2) expansion fans out across tasks (pinned by
-    #    tests/test_dedup.py::test_minhash_within_group_expansion_is_skew_splittable).
-    # Singleton fps produce no a<b pairs, so no pre-filter is needed.
-    # Both join legs read the doc_fp checkpoint — zero additional corpus
-    # scans (the old shape re-computed md5-over-text on each leg).
-    within = (
-        doc_fp.select("fp", F.col("doc").alias("doc_a"))
-        .join(doc_fp.select("fp", F.col("doc").alias("doc_b")), "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(1.0).alias("jaccard"))
-    )
-    return cross.union(within)
 
 
 _SIMHASH_BITS = 64
@@ -1083,18 +962,20 @@ def simhash_hamming_pairs(
     candidates come from 4 short (band, value) shuffles — never all-pairs
     — and the exact popcount verify runs on candidates only.
 
-    **Fingerprint canonicalization first** (the minhash_lsh_pairs
-    pattern, ADVICE r7): m exact copies of one template share the SAME
-    fingerprint, hence all 4 (band, bval) keys — banding raw docs pushes
-    4·C(m,2) join rows through one reduce key before the distinct. So the
-    band self-join runs over one representative per DISTINCT fingerprint;
-    identical-fingerprint (Hamming-0) pairs are reconstructed by a
-    self-join of the pre-group (doc, fp) rows on the fingerprint digest —
-    spread across all scan map tasks, so AQE's skew split can cut the hot
-    fingerprint's C(m,2) expansion at map-output boundaries (the
-    members-array explode could never split; see the minhash within-group
-    comment). Cross-group pairs expand representative pairs over group
-    members through two fingerprint-keyed joins.
+    **Fingerprint canonicalization first** (ADVICE r7): m exact copies of
+    one template share the SAME fingerprint, hence all 4 (band, bval)
+    keys — banding raw docs pushes 4·C(m,2) join rows through one reduce
+    key before the distinct. So the band self-join runs over one
+    representative per DISTINCT fingerprint; identical-fingerprint
+    (Hamming-0) pairs are reconstructed by a self-join of the pre-group
+    (doc, fp) rows on the fingerprint digest. Those rows stay spread
+    across all scan map tasks, and AQE's skew split can cut a reduce
+    partition only at map-output boundaries, so the hot fingerprint's
+    C(m,2) expansion fans out across tasks. Exploding a collected
+    members array instead would emit the whole group from ONE mapper, a
+    single block no skew split can cut. Cross-group pairs expand
+    representative pairs over group members through two
+    fingerprint-keyed joins.
 
     The fingerprint table is localCheckpoint'ed once: the Arrow-batched
     SimHash UDF scan is the dominant cost and feeds three consumers

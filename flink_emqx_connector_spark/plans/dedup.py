@@ -94,10 +94,11 @@ def _minhash_oracle_sql(
     aggregates → exact band-concat bucketing → band-collision candidate
     pairs → signature-agreement screen (same float floor literal) → exact
     shingle-Jaccard verify with engine-stable rounding → member expansion.
-    The SQL always canonicalizes; the Spark side's no-canonicalize branch
-    (probe says the corpus is already ≥95%-distinct) is output-equivalent:
-    identical texts have identical signatures, so they collide in every
-    band, pass the screen at agreement 1, and verify at exactly 1.0.
+    The Spark plan never canonicalizes: it runs LSH over every document.
+    The SQL's canonicalization gives the same output: identical texts have
+    identical signatures, so they collide in every band, pass the screen
+    at agreement 1 and verify at exactly 1.0, and a copy of a text pairs
+    with whatever its representative pairs with, at the same Jaccard.
     """
     params = D._minhash_params(num_hashes)
     r = num_hashes // bands

@@ -295,9 +295,9 @@ def test_minhash_lsh_leaves_no_cache_behind(spark, sf_dir):
 
 
 def test_lsh_exact_dup_canonicalization(spark, sf_dir):
-    """On a corpus with exact copies the LSH pipeline canonicalizes (LSH
-    over distinct texts, pairs expanded over copy groups): results must
-    still be a subset of exact all-pairs with identical jaccard, and every
+    """On a corpus where every text has an exact copy, LSH finds each
+    copy pair (identical signatures collide in every band): results must
+    be a subset of exact all-pairs with identical jaccard, and every
     exact-copy pair must be present with jaccard 1.0."""
     docs = _docs(spark, sf_dir).select("doc_id", "text").limit(200)
     shift = 1_000_000
@@ -326,10 +326,11 @@ def test_hot_template_corpus_exact_behavior(spark):
     the corpus. Pins the designed behavior of three operators on a
     hot-template corpus:
 
-    - minhash_lsh_pairs: exact-dup canonicalization absorbs the copies —
-      the quadratic candidate stages see ONE representative; the output is
-      exactly the C(m,2) within-group pairs at jaccard 1.0 (nothing
-      scattered, no cross-group noise on a disjoint-vocab corpus);
+    - minhash_lsh_pairs: the copies share every bucket, so the candidate
+      self-join emits their C(m,2) pairs once per band and the distinct
+      folds them; the output is exactly the C(m,2) copy pairs at jaccard
+      1.0 (nothing scattered, no cross-template noise on a disjoint-vocab
+      corpus);
     - line_dedup_docs: the hot segment join key (df = m) is handled by
       AQE's skew split; per-doc stats come out exactly right;
     - exact_dedup: the keep-list is 1 row for the hot group.
@@ -375,24 +376,33 @@ def test_hot_template_corpus_exact_behavior(spark):
     assert ld[m]["n_boiler"] == 0 and ld[m]["kept_words"] == 40
 
 
-def test_minhash_within_group_expansion_is_skew_splittable(spark):
-    """Pin the PARALLELISM of the within-group C(m,2) expansion (VERDICT r6
-    item 7): the jaccard-1.0 pairs must be produced by a skew-splittable
-    shuffle join over the pre-group (doc, fp) rows, never by exploding the
-    hot group's collected members array.
+def test_minhash_candidate_join_is_skew_splittable(spark, monkeypatch):
+    """Pin the SHAPE and PARALLELISM of MinHash candidate generation
+    (VERDICT r6 item 7): a bucket's pairs must come from a shuffle
+    self-join of the (band, bh, doc) rows, never from exploding a bucket's
+    collected member set.
 
     Why this shape is load-bearing: AQE's skew split can only cut a reduce
-    partition at MAP-OUTPUT boundaries. The members-array explode emits
-    the whole hot group from ONE mapper — a single unsplittable block that
-    funnels every within pair through one task (the round-6 probe killed
-    an executor this way). Joining the pre-group rows gives the hot fp as
-    many split points as corpus-scan partitions.
+    partition at MAP-OUTPUT boundaries. A collected set is one row, so
+    exploding it emits a hot bucket's m² pairs from ONE task (the round-6
+    probe killed an executor this way). The self-join streams the bucket
+    rows from every mapper, so a hot bucket has as many split points as
+    map tasks.
 
-    The test forces the scale regime onto a small corpus (shuffle join +
-    tiny skew thresholds) and asserts the hot group's pairs came out of
-    MULTIPLE tasks; a regression to any single-mapper expansion collapses
-    the output to one spark_partition_id and fails.
+    The test forces the scale regime onto a small corpus (shuffle joins +
+    tiny skew thresholds) with 1,500 copies of one template, captures the
+    candidate frame ``minhash_lsh_pairs`` hands to ``_verify_candidates``,
+    and asserts its plan is a join with no collect_set, that AQE split the
+    hot buckets, and that the output pairs came out of MULTIPLE tasks.
     """
+    seen = []
+    verify = D._verify_candidates
+
+    def spy(docs, cand, *args):
+        seen.append(cand)
+        return verify(docs, cand, *args)
+
+    monkeypatch.setattr(D, "_verify_candidates", spy)
     skew_conf = {
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.0",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
@@ -426,10 +436,17 @@ def test_minhash_within_group_expansion_is_skew_splittable(spark):
         total = sum(per_task)
         assert total == m * (m - 1) // 2, per_task  # answer unchanged
         # the parallelism property: several tasks, none of them dominant
-        assert len(per_task) >= 2, "within-group expansion ran in ONE task"
+        assert len(per_task) >= 2, "pair output ran in ONE task"
         assert max(per_task) < total, per_task
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "skew=true" in plan, "AQE skew split did not engage"
+
+        (cand,) = seen
+        qe = cand._jdf.queryExecution()
+        shape = spark._jvm.PythonSQLUtils.explainString(qe, "formatted")
+        assert "Join" in shape and "collect_set" not in shape, shape
+        # run the candidate plan itself: AQE must split its hot buckets
+        assert qe.executedPlan().execute().count() == total
+        final = qe.executedPlan().toString()
+        assert "skew=true" in final, "AQE skew split did not engage"
     finally:
         for k, v in saved.items():
             if v is None:
@@ -546,7 +563,7 @@ def test_simhash_hamming_hot_template_canonicalization(spark):
     canonicalized pipeline must (a) produce exactly the C(m,2) hamming-0
     pairs plus near-template cross pairs, (b) generate the hot group's
     pairs from MULTIPLE tasks (pre-group self-join, skew-splittable at
-    map-output boundaries — the minhash within-group property)."""
+    map-output boundaries)."""
     skew_conf = {
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.0",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
@@ -642,8 +659,9 @@ def test_normalized_dedup_merges_case_and_whitespace_variants(spark, tmp_path):
     assert exact[0] == 1, exact  # byte-exact keeps them apart
 
 
-def _generated_documents(spark, out_dir, seed):
-    """The 1,500-document corpus ``dev/gen_testdata.py`` makes at sf0.03."""
+def _generate_documents(out_dir, seed):
+    """Write the 1,500-document corpus ``dev/gen_testdata.py`` makes at
+    sf0.03."""
     import importlib.util
     import os
 
@@ -654,29 +672,24 @@ def _generated_documents(spark, out_dir, seed):
     gen = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(gen)
     gen.generate(out_dir, 0.03, seed=seed, tables={"documents"})
-    return _docs(spark, out_dir)
 
 
 @pytest.mark.parametrize("seed", [15, 19])
-def test_minhash_probe_reads_a_distinct_corpus_as_distinct(
-    spark, tmp_path, monkeypatch, seed
-):
-    """The generated corpus is 99.5% distinct texts (1,492 of 1,500), but
-    on seeds 15 and 19 the HLL sketch reads fewer than 0.95 of the rows as
-    distinct. The probe's cut allows for the sketch's error, so these
-    corpora take the non-canonicalizing branch, and forcing the other
-    branch gives the same pairs."""
-    docs = _generated_documents(spark, str(tmp_path), seed)
-    n, nd = docs.agg(
-        F.count("*"), F.approx_count_distinct("text", rsd=D._PROBE_RSD)
-    ).first()
-    assert n == 1500 and 0.85 * n < nd < 0.95 * n, (n, nd)
-    assert not D._dup_heavy(docs, "text")
+def test_minhash_matches_oracle_on_generated_corpus(spark, sf_dir, tmp_path, seed):
+    """On the generated corpus (1,500 documents, ~99.5% distinct texts,
+    some exact copies) ``minhash_lsh_pairs``, which runs LSH over every
+    document, must give exactly the pairs of the DuckDB oracle, which runs
+    it over one document per distinct text and expands the copies."""
+    import os
 
-    def pairs():
-        return sorted(map(tuple, D.minhash_lsh_pairs(docs).collect()))
+    from flink_emqx_connector_spark.plans.check import TABLES, compare_query
 
-    default = pairs()
-    assert default  # the corpus's exact and near copies pair up
-    monkeypatch.setattr(D, "_dup_heavy", lambda _docs, _col: True)
-    assert pairs() == default
+    _generate_documents(str(tmp_path), seed)
+    for t in TABLES:  # the oracle connection registers every table
+        if t != "documents":
+            os.symlink(
+                os.path.join(sf_dir, f"{t}.parquet"), tmp_path / f"{t}.parquet"
+            )
+    res = compare_query(spark, str(tmp_path), "dedup_minhash_lsh")
+    assert res["ok"], res
+    assert res["spark_rows"] > 0  # the corpus's exact and near copies pair up

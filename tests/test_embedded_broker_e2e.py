@@ -1447,10 +1447,11 @@ def test_bridge_watchdog_cedes_after_session_takeover():
         owner.loop_start()
 
         assert _wait(lambda: getattr(old, "superseded", False), timeout=10)
-        # outlast BOTH the watchdog (0.3 s) and paho's reconnect
-        # min_delay (1 s): without the on_disconnect client.disconnect()
-        # the auto-reconnect loop would retake the session here with the
-        # same clientid + clean_start=False and ping-pong with the owner
+        # outlast BOTH the watchdog (0.3 s) and the bridge's reconnect
+        # min_delay (1 s): mqtt_wire.Client stops its loop on 0x8E, so a
+        # member that reconnected anyway would retake the session here
+        # with the same clientid + clean_start=False and ping-pong with
+        # the owner
         time.sleep(2.5)
         assert bridge.respawns == 0, "watchdog respawned a superseded member"
         assert bridge._clients[0] is old
